@@ -63,9 +63,7 @@ object ScheduledRunner {
           s"unrecognized trailing args '${other.mkString(" ")}'; $usage")
     }
 
-    val spark = GraftSession.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt,
-      appName = s"graft-scheduled-${args(0)}")
+    val spark = GraftSession.local(cores = cores(sys.env), appName = s"graft-scheduled-${args(0)}")
     val clock = () => {
       val now = LocalDateTime.now()
       (now.toLocalDate, now.toLocalDate, now.toLocalTime)
@@ -73,6 +71,14 @@ object ScheduledRunner {
     runTick(spark, policy, snapshotDir, sinkPath, checkpointDir, trigger, clock)
     spark.stop()
   }
+
+  /** Local cores for the tick's session: `SPARK_GRAFT_CPUS` when set and
+    * non-empty, else every processor the JVM sees — a tick sizes itself
+    * to its host instead of assuming one.
+    */
+  def cores(env: Map[String, String]): Int =
+    env.get("SPARK_GRAFT_CPUS").map(_.trim).filter(_.nonEmpty)
+      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
 
   /** One scheduler tick (or the resident loop, per `trigger`): wire the
     * snapshot-dir file source through the per-batch pipeline lifecycle

@@ -68,12 +68,13 @@ object Delta {
     (diffed(joined), obs)
   }
 
-  private def diffed(joined: DataFrame): DataFrame =
-    joined
-      .withColumn("Open", coalesce(col("prev_close"), lit(0.0)))
-      .withColumn(
-        "OI_Change",
-        when(col("prev_oi").isNotNull, col("OI") - col("prev_oi")).otherwise(lit(0L))
-      )
-      .drop("prev_close", "prev_oi")
+  /** The current columns then Open and OI_Change, in one projection. */
+  private def diffed(joined: DataFrame): DataFrame = {
+    val derived = Set("prev_close", "prev_oi", "Open", "OI_Change")
+    joined.select(
+      joined.columns.filterNot(derived).map(col) :+
+        coalesce(col("prev_close"), lit(0.0)).as("Open") :+
+        when(col("prev_oi").isNotNull, col("OI") - col("prev_oi")).otherwise(lit(0L)).as("OI_Change"): _*
+    )
+  }
 }

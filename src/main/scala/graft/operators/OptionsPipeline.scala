@@ -3,7 +3,6 @@ package graft.operators
 import java.time.{LocalDate, LocalTime}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.Schemas
 
@@ -73,6 +72,12 @@ object OptionsPipeline {
 
   /** One scheduled run (reference main(), main.py:353-396).
     *
+    * The typed snapshot is persisted, and the returned frame is lazy and
+    * reads that cache whenever it runs, so runBatch cannot release it: the
+    * cache stays registered for the session (the registry's q13/q14). A
+    * caller that consumes the batch at once uses [[withBatch]], which
+    * releases it.
+    *
     * @param rawTickers raw snapshot (Schemas.ticker shape, with src_seq)
     * @param state      previous sink rows (tail-N read-back; may be empty)
     * @param today      "today" for expiry policy (reference uses IST now)
@@ -86,23 +91,51 @@ object OptionsPipeline {
       today: LocalDate,
       batchDate: LocalDate,
       batchTime: LocalTime
+  ): DataFrame = plan(persistTyped(rawTickers), state, policy, today, batchDate, batchTime)
+
+  /** [[runBatch]] for a caller that consumes the batch at once (the
+    * scheduled tick's sink append): `use` runs while the typed cache is
+    * live, and the cache is released when `use` returns or throws, so a
+    * resident stream holds no cache across ticks.
+    */
+  def withBatch[T](
+      rawTickers: DataFrame,
+      state: DataFrame,
+      policy: Policy,
+      today: LocalDate,
+      batchDate: LocalDate,
+      batchTime: LocalTime
+  )(use: DataFrame => T): T = {
+    val typed = persistTyped(rawTickers)
+    try use(plan(typed, state, policy, today, batchDate, batchTime))
+    finally typed.unpersist()
+  }
+
+  // Structural choice: persist the PARSED (typed) snapshot, not the raw
+  // strings. The snapshot feeds the policy pre-pass AND the main pass;
+  // caching the typed frame means the source (a derived, shuffled plan for
+  // the registry's synthetic tickers) is computed once per batch and every
+  // per-row string expression (tokenize, numeric casts, the DDMMYY date
+  // parse) runs exactly once, at cache materialization, inside whole-stage
+  // codegen. Caching the RAW side instead re-evaluates the parse in every
+  // consumer stage above the cache, where it can run interpreted (measured
+  // 100-900 CPU-seconds per q14 batch at sf0.1). No repartition here:
+  // sources own their scan parallelism (GraftSession sets 8m split bytes;
+  // TickerSource repartitions before its string build — a repartition of
+  // the built strings would just re-shuffle them). Cached blocks spill to
+  // disk. The CacheManager holds the entry until it is unpersisted — the
+  // ContextCleaner never drops a registered cache.
+  private def persistTyped(rawTickers: DataFrame): DataFrame =
+    parseColumns(rawTickers).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  private def plan(
+      typed: DataFrame,
+      state: DataFrame,
+      policy: Policy,
+      today: LocalDate,
+      batchDate: LocalDate,
+      batchTime: LocalTime
   ): DataFrame = {
-    // Structural choice: persist the PARSED (typed) snapshot, not the raw
-    // strings. The snapshot feeds the policy pre-pass, the main pass, AND
-    // the final sort's range-partition sampler; caching the typed frame
-    // means the source is scanned once per batch and — critically — every
-    // per-row string expression (tokenize, numeric casts, the DDMMYY date
-    // parse) runs exactly once, at cache materialization, inside
-    // whole-stage codegen. Caching the RAW side instead re-evaluates the
-    // parse in every consumer stage above the cache, where it can run
-    // interpreted (measured 100-900 CPU-seconds per q14 batch at sf0.1).
-    // No repartition here: sources own their scan parallelism (GraftSession
-    // sets 8m split bytes; TickerSource repartitions before its string
-    // build — a repartition of the built strings would just re-shuffle
-    // them). Cached blocks spill to disk and are dropped by the
-    // ContextCleaner once the plan is unreferenced.
-    val typed = parseColumns(rawTickers)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val parsed = dropUnparseable(typed)
 
     // Expiry-policy pre-pass (reference pass 1, main.py:128-141): the ONLY
@@ -126,21 +159,20 @@ object OptionsPipeline {
       .where(Snapshot.expiryIn(col("expiry"), targets))
 
     val deduped = Snapshot.keepLast(banded, Seq("SYMBOL"), "src_seq")
+    val withDelta = Delta.applyDelta(deduped, Delta.prepareState(state, "state_seq"))
 
-    val stamped = deduped
-      .withColumn("Date", date_format(lit(java.sql.Date.valueOf(batchDate)), "yyyy-MM-dd"))
-      .withColumn(
-        "Time",
-        lit(batchTime.format(java.time.format.DateTimeFormatter.ofPattern("HH:mm:ss")))
-      )
-      .withColumn("Future_Price", col("spot"))
-      .withColumn("Expiry_Date", date_format(col("expiry"), "yyyy-MM-dd"))
-
-    val withDelta = Delta.applyDelta(stamped, Delta.prepareState(state, "state_seq"))
-
-    val cleaned = Seq("Future_Price", "Strike", "Close", "Open")
-      .foldLeft(withDelta)((df, c) => df.withColumn(c, Snapshot.cleanNumeric(col(c))))
-
-    Snapshot.canonicalSort(cleaned.select(Schemas.sinkColumns.map(col): _*))
+    // The stamps, the derived columns and the NaN/±Inf cleanup in ONE
+    // projection: each chained withColumn would re-analyse the whole plan.
+    val sinkRow = Map(
+      "Date" -> date_format(lit(java.sql.Date.valueOf(batchDate)), "yyyy-MM-dd"),
+      "Time" -> lit(batchTime.format(java.time.format.DateTimeFormatter.ofPattern("HH:mm:ss"))),
+      "Future_Price" -> Snapshot.cleanNumeric(col("spot")),
+      "Expiry_Date" -> date_format(col("expiry"), "yyyy-MM-dd"),
+      "Strike" -> Snapshot.cleanNumeric(col("Strike")),
+      "Close" -> Snapshot.cleanNumeric(col("Close")),
+      "Open" -> Snapshot.cleanNumeric(col("Open"))
+    )
+    Snapshot.canonicalSort(
+      withDelta.select(Schemas.sinkColumns.map(c => sinkRow.getOrElse(c, col(c)).as(c)): _*))
   }
 }

@@ -28,9 +28,11 @@ import graft.sinks.ParquetSink
   * clock, §7.4).
   *
   * Scale: everything inside the batch is the runBatch plan (typed-parse
-  * cache, broadcast delta join); the state read is a bounded top-N. The
-  * one cross-batch serialization point is the sink append — inherent to
-  * the reference's chain-through-the-sink design, not to this adapter.
+  * cache, released when the append returns; broadcast delta join); the
+  * state read is a bounded top-N whose directory choice reads footers on
+  * the driver. The one cross-batch serialization point is the sink append
+  * — inherent to the reference's chain-through-the-sink design, not to
+  * this adapter.
   */
 object PipelineStream {
 
@@ -86,7 +88,7 @@ object PipelineStream {
           .select("SYMBOL", "Close", "OI", "state_seq")
       else ParquetSink.emptyState(spark)
     val (today, batchDate, batchTime) = clock()
-    val out = OptionsPipeline.runBatch(batch, state, policy, today, batchDate, batchTime)
-    ParquetSink.append(out, sinkPath, batchId)
+    OptionsPipeline.withBatch(batch, state, policy, today, batchDate, batchTime)(
+      ParquetSink.append(_, sinkPath, batchId))
   }
 }
