@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
   *
-  * Tuned for the driver's harness (local[32], 128 GiB single JVM) but the
+  * The local master sizes itself to its host ([[cores]]), and the
   * settings below are the ones we would ship on a real cluster too:
   * AQE on (runtime re-planning, skew-join splitting), shuffle partitions
   * sized to the parallelism actually available rather than the 200 default.
@@ -18,7 +18,16 @@ import org.apache.spark.sql.SparkSession
   * Verify session).
   */
 object GraftSession {
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
+
+  /** Local cores: `SPARK_GRAFT_CPUS` when set and non-empty, else every
+    * processor the JVM sees — a session sizes itself to its host instead
+    * of assuming one.
+    */
+  def cores(env: Map[String, String]): Int =
+    env.get("SPARK_GRAFT_CPUS").map(_.trim).filter(_.nonEmpty)
+      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
+  def local(cores: Int = GraftSession.cores(sys.env), appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
@@ -32,7 +41,7 @@ object GraftSession {
       // The generated-code cache defaults to 100 entries — a single
       // pair-mining + iterative-CC mega-plan (x44/x14/x71) emits enough
       // codegen units to evict ITSELF, so every execution re-Janinos and
-      // HotSpot re-JITs ~86 classes (~3.4 s/rep measured, ProbeJit).
+      // HotSpot re-JITs ~86 classes (~3.4 s/rep measured).
       // 4096 entries makes repeated plans cache-hit (misses drop to ~5,
       // x44 wall 4.8 → 3.9 s); the cost is bounded driver-side class
       // retention, negligible against a 122-query engine's footprint.

@@ -31,8 +31,8 @@ private[graft] trait RetrievalRegistry extends MediaGraphRegistry {
   }
 
   /** LSH-bucketed approximate top-5 (scale path). Registered at L=48
-    * tables: AnnRecallProbe's committed tables sweep (16/32/48, re-run
-    * this round) measures that at 48 tables the OR-amplified candidate set
+    * tables: a committed tables sweep (16/32/48, re-run this round)
+    * measures that at 48 tables the OR-amplified candidate set
     * covers the exact top-5 for every query at sf0.001/0.01/0.1 — 32
     * covers sf0.01/0.1 but misses 2 of 50 at sf0.001, and 16 reaches only
     * 0.58–0.84 — and since candidates are reranked by the same exact
@@ -115,7 +115,7 @@ private[graft] trait RetrievalRegistry extends MediaGraphRegistry {
     * probe join, and the exact rerank — against the x09-shaped DuckDB
     * oracle, since full probe must equal brute force exactly. The synthetic
     * embeddings are near-uniform on the sphere, so partial probes genuinely
-    * approximate here (AnnRecallProbe: even nprobe=15/16 drops 4/50 hits at
+    * approximate here (measured: even nprobe=15/16 drops 4/50 hits at
     * sf0.01); approximate configs keep their spec-pinned golden + recall
     * floor (SimilaritySpec).
     */

@@ -24,9 +24,13 @@ import graft.streaming.PipelineStream
   * every snapshot file that arrived since the LAST tick (the checkpoint
   * remembers the file-source offset), chain Open/OI_Change through the
   * sink tail exactly as consecutive reference cron runs chain through the
-  * sheet, then terminate. Re-running after a crash is safe — committed
-  * micro-batches are skipped by the checkpoint, and the sink append is
-  * ledgered (see [[graft.sinks.ParquetSink]]).
+  * sheet, then terminate. Re-running after a crash skips the micro-batches
+  * the checkpoint committed, but the sink append is NOT idempotent:
+  * [[graft.sinks.ParquetSink.append]] writes with `mode("append")` and
+  * never checks for an existing `batch_id=N`, so a crash between the
+  * write and the commit log re-appends that batch on the rerun (its rows
+  * and `sink_seq` values twice, both fed to the next tail read). An
+  * exactly-once sink is ROADMAP item 1.
   *
   * The same binary ALSO runs resident (`--resident <intervalSec>`): swap
   * the one-shot trigger for `Trigger.ProcessingTime(interval)` and let
@@ -63,7 +67,7 @@ object ScheduledRunner {
           s"unrecognized trailing args '${other.mkString(" ")}'; $usage")
     }
 
-    val spark = GraftSession.local(cores = cores(sys.env), appName = s"graft-scheduled-${args(0)}")
+    val spark = GraftSession.local(appName = s"graft-scheduled-${args(0)}")
     val clock = () => {
       val now = LocalDateTime.now()
       (now.toLocalDate, now.toLocalDate, now.toLocalTime)
@@ -71,14 +75,6 @@ object ScheduledRunner {
     runTick(spark, policy, snapshotDir, sinkPath, checkpointDir, trigger, clock)
     spark.stop()
   }
-
-  /** Local cores for the tick's session: `SPARK_GRAFT_CPUS` when set and
-    * non-empty, else every processor the JVM sees — a tick sizes itself
-    * to its host instead of assuming one.
-    */
-  def cores(env: Map[String, String]): Int =
-    env.get("SPARK_GRAFT_CPUS").map(_.trim).filter(_.nonEmpty)
-      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
 
   /** One scheduler tick (or the resident loop, per `trigger`): wire the
     * snapshot-dir file source through the per-batch pipeline lifecycle

@@ -6,7 +6,7 @@ package graft
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(cores = 8, appName = "graft-smoke")
+    val spark = GraftSession.local(appName = "graft-smoke")
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"SMOKE rows=$n")

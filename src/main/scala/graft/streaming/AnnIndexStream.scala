@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.GraftFunctions
@@ -69,9 +68,12 @@ import graft.operators.Similarity
   * replay no-ops, restart resume, mid-write fallback, and the
   * stale-checkpoint refusal.
   */
-object AnnIndexStream {
+object AnnIndexStream extends StreamTwin {
 
   final case class Vec(vec_id: Long, embedding: Array[Float])
+
+  type In = Vec
+  type Mt = Maintainer
 
   private val bucketsSchema = StructType(Seq(
     StructField("neighbor_id", LongType),
@@ -84,32 +86,23 @@ object AnnIndexStream {
 
   private val frames = Seq("buckets" -> bucketsSchema, "vectors" -> vectorsSchema)
 
+  // DELTA-epoch persistence (see RetrievalStream): both index frames
+  // grow with the corpus, so epochs persist batch deltas and compact
+  // every K — amortized O(delta + state/K) writes per batch instead of
+  // O(corpus)
   final class Maintainer(
       spark: SparkSession,
       tables: Int = 8,
       bitsPerTable: Int = 6,
-      val stateDir: Option[String] = None,
+      stateDir: Option[String] = None,
       compactEvery: Int = 8
-  ) {
+  ) extends EpochMaintainer(spark, stateDir, frames, new DeltaEpochStore(spark, _, _, compactEvery)) {
 
-    // DELTA-epoch persistence (see RetrievalStream): both index frames
-    // grow with the corpus, so epochs persist batch deltas and compact
-    // every K — amortized O(delta + state/K) writes per batch instead of
-    // O(corpus)
-    private val store: Option[DeltaEpochStore] =
-      stateDir.map(new DeltaEpochStore(spark, _, frames, compactEvery))
-
-    @volatile private var state: Map[String, DataFrame] = store
-      .flatMap(_.load())
-      // raw compact+delta unions → the same keep-one merges the update
-      // fold uses, once, at load
-      .map(m => Map(
-        "buckets" -> mergedBuckets(m("buckets")).localCheckpoint(true),
-        "vectors" -> mergedVectors(m("vectors")).localCheckpoint(true)))
-      .getOrElse(EpochStore.emptyFrames(spark, frames))
-
-    /** True iff construction reloaded a persisted epoch (restart path). */
-    def resumed: Boolean = store.exists(_.latestCommitted >= 0)
+    // raw compact+delta unions → the same keep-one merges the update
+    // fold uses, once, at load
+    @volatile private var state: Map[String, DataFrame] = loadOrEmpty(m => Map(
+      "buckets" -> mergedBuckets(m("buckets")).localCheckpoint(true),
+      "vectors" -> mergedVectors(m("vectors")).localCheckpoint(true)))
 
     /** The live bucket index: one row per (vector, table). */
     def buckets: DataFrame = state("buckets")
@@ -140,7 +133,7 @@ object AnnIndexStream {
         .agg(min(col("c_vec")).as("c_vec"))
         .select(col("neighbor_id"), col("c_vec"))
 
-    private[graft] def update(batch: DataFrame, epochId: Long = -1L): Unit = {
+    private[graft] def update(batch: DataFrame, epochId: Long): Unit = {
       val delta = batch.select(
         col("vec_id").cast(LongType).as("neighbor_id"),
         col("embedding").cast(ArrayType(FloatType)).as("c_vec"))
@@ -164,28 +157,4 @@ object AnnIndexStream {
     }
   }
 
-  /** Start the maintainer over a streaming Dataset[Vec]; call
-    * `maintainer.topK(queries)` between batches for the live ranking.
-    */
-  def start(
-      vecs: Dataset[Vec],
-      maintainer: Maintainer,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      allowVolatileState: Boolean = false
-  ): StreamingQuery = {
-    require(
-      checkpoint.isEmpty || maintainer.stateDir.nonEmpty || allowVolatileState,
-      "checkpointLocation set but the Maintainer has no stateDir: a restart " +
-        "would skip committed batches against an empty bucket index and " +
-        "silently rank over a partial corpus. Pass a stateDir (persisted " +
-        "state) or allowVolatileState = true if the checkpoint is known fresh.")
-    val writer = vecs.toDF.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        maintainer.update(batch.toDF(), epochId)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
 }

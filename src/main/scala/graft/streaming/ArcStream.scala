@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.functions.GraftFunctions
@@ -68,9 +67,12 @@ import graft.operators.{Decontaminate, LinearModel, WebArc}
   * fold logic unchanged). The view costs what batch stages 9–11 cost —
   * paid when the selection is READ, not per delivery.
   */
-object ArcStream {
+object ArcStream extends StreamTwin {
 
   final case class Doc(doc_id: Long, source: String, text: String)
+
+  type In = Doc
+  type Mt = Maintainer
 
   private val minPagesSchema = StructType(Seq(
     StructField("text_md5", StringType),
@@ -98,8 +100,10 @@ object ArcStream {
       trainRounds: Int = 3,
       packCapacity: Long = 256L,
       packGroups: Int = 8,
-      val stateDir: Option[String] = None
-  ) {
+      stateDir: Option[String] = None
+  ) extends EpochMaintainer(
+        spark, stateDir, Seq("minPages" -> minPagesSchema, "classFlags" -> classFlagsSchema),
+        (d, frames) => new EpochStore(spark, s"$d/arc", frames)) {
     GraftFunctions.register(spark)
 
     // the eval universe is FIXED for the maintainer's lifetime (the
@@ -112,16 +116,7 @@ object ArcStream {
       spark, n = 3, threshold = 0.5, bands = 32, rowsPerBand = 4,
       stateDir = stateDir.map(d => s"$d/neardup"))
 
-    private val frameSchemas = Seq(
-      "minPages" -> minPagesSchema, "classFlags" -> classFlagsSchema)
-    private val store: Option[EpochStore] =
-      stateDir.map(d => new EpochStore(spark, s"$d/arc", frameSchemas))
-    private val initial: Map[String, DataFrame] = store
-      .flatMap(_.load())
-      .getOrElse(EpochStore.emptyFrames(spark, frameSchemas))
-
-    /** True iff construction reloaded a persisted epoch (restart path). */
-    def resumed: Boolean = store.exists(_.latestCommitted >= 0)
+    private val initial: Map[String, DataFrame] = loadOrEmpty()
 
     @volatile private var minPages: DataFrame = initial("minPages")
     @volatile private var classFlags: DataFrame = initial("classFlags")
@@ -131,7 +126,7 @@ object ArcStream {
       */
     def state: DataFrame = minPages
 
-    private[graft] def update(batch: DataFrame, epochId: Long = -1L): Unit = {
+    private[graft] def update(batch: DataFrame, epochId: Long): Unit = {
       // stages 1–4 map-side on the delivery: WARC walk + extract +
       // screens (pure text functions — the screen-first equivalence)
       val screened = WebArc
@@ -248,28 +243,4 @@ object ArcStream {
     }
   }
 
-  /** Start the maintainer over a streaming Dataset[Doc]; read
-    * `maintainer.curated()` between batches for the live curated corpus.
-    */
-  def start(
-      docs: Dataset[Doc],
-      maintainer: Maintainer,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      allowVolatileState: Boolean = false
-  ): StreamingQuery = {
-    require(
-      checkpoint.isEmpty || maintainer.stateDir.nonEmpty || allowVolatileState,
-      "checkpointLocation set but the Maintainer's state is memory-only: a " +
-        "restart would skip committed batches against an empty corpus and " +
-        "silently lose the kept set. Pass a stateDir (persisted state) or " +
-        "allowVolatileState = true if the checkpoint is known fresh.")
-    val writer = docs.toDF.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        maintainer.update(batch.toDF(), epochId)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
 }

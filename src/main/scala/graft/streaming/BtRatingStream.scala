@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.Preference
@@ -35,11 +34,10 @@ import graft.operators.Preference
   * state — stream ≡ batch by shared code, not a parallel
   * reimplementation.
   *
-  * RESTART SAFETY — the [[DeltaEpochStore]] contract (the event log
-  * grows with the stream): per-epoch deltas computed from the batch
-  * ALONE (a replayed batch re-derives identical rows; the distinct
-  * merge collapses them), durable state advances save-first
-  * (compute → persist → swap, the FuzzyStream ordering).
+  * RESTART SAFETY — the [[DeltaEpochStore]] contract of the
+  * [[EventSetMaintainer]] (the event log grows with the stream): a
+  * replayed batch re-derives identical rows that the distinct merge
+  * collapses, and durable state advances save-first.
   *
   * 100 TB shape: the fold is one row-keyed distinct per batch; each
   * served view is x136's audited plan — ONE corpus-sized keyed
@@ -47,9 +45,12 @@ import graft.operators.Preference
   * the items²-bounded MM fixpoint on the driver under the
   * codebook-contract bound.
   */
-object BtRatingStream {
+object BtRatingStream extends StreamTwin {
 
   final case class Comparison(cmp_id: Long, item_a: Long, item_b: Long, winner: Long)
+
+  type In = Comparison
+  type Mt = Maintainer
 
   private val cmpSchema = StructType(Seq(
     StructField("cmp_id", LongType),
@@ -59,26 +60,9 @@ object BtRatingStream {
 
   final class Maintainer(
       spark: SparkSession,
-      val stateDir: Option[String] = None,
+      stateDir: Option[String] = None,
       compactEvery: Int = 8
-  ) {
-
-    private val store: Option[DeltaEpochStore] =
-      stateDir.map(new DeltaEpochStore(spark, _, Seq("comparisons" -> cmpSchema), compactEvery))
-
-    @volatile private var comparisons: DataFrame = store
-      .flatMap(_.load())
-      // raw compact+delta union → the same distinct merge the fold uses
-      .map(m => m("comparisons").distinct().localCheckpoint(true))
-      .getOrElse(EpochStore
-        .emptyFrames(spark, Seq("comparisons" -> cmpSchema))
-        .apply("comparisons"))
-
-    /** True iff construction reloaded a persisted epoch (restart path). */
-    def resumed: Boolean = store.exists(_.latestCommitted >= 0)
-
-    /** The live distinct comparison-event set folded so far. */
-    def state: DataFrame = comparisons
+  ) extends EventSetMaintainer(spark, stateDir, "comparisons", cmpSchema, compactEvery) {
 
     /** Current ratings over everything folded so far — the batch twin's
       * output through the batch twin's own fitter (view-forced emission;
@@ -86,51 +70,7 @@ object BtRatingStream {
       */
     def ratings(rounds: Int = 4): DataFrame =
       Preference.btRatings(
-        comparisons.select(col("item_a"), col("item_b"), col("winner")),
+        state.select(col("item_a"), col("item_b"), col("winner")),
         rounds)
-
-    private[graft] def update(batch: DataFrame, epochId: Long = -1L): Unit = {
-      // delta from the batch ALONE: replay after a failed save re-derives
-      // the identical rows, and the distinct merge collapses them
-      val delta = batch
-        .select(
-          col("cmp_id").cast(LongType),
-          col("item_a").cast(LongType),
-          col("item_b").cast(LongType),
-          col("winner").cast(LongType))
-        .distinct()
-        .localCheckpoint(true)
-      val newComparisons = comparisons.unionByName(delta).distinct().localCheckpoint(true)
-      // save BEFORE the in-memory swap (the FuzzyStream ordering): a
-      // failed save leaves pre-batch state, and the replayed epoch
-      // recommits the same delta
-      store.foreach(_.save(epochId, Map("comparisons" -> delta), Map("comparisons" -> newComparisons)))
-      comparisons = newComparisons
-    }
-  }
-
-  /** Start the maintainer over a streaming Dataset[Comparison]; call
-    * `maintainer.ratings()` between batches for the live board.
-    */
-  def start(
-      stream: Dataset[Comparison],
-      maintainer: Maintainer,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      allowVolatileState: Boolean = false
-  ): StreamingQuery = {
-    require(
-      checkpoint.isEmpty || maintainer.stateDir.nonEmpty || allowVolatileState,
-      "checkpointLocation set but the Maintainer has no stateDir: a restart " +
-        "would skip committed batches against an empty event set and rate " +
-        "from a silently partial log. Pass a stateDir (persisted state) or " +
-        "allowVolatileState = true if the checkpoint is known fresh.")
-    val writer = stream.toDF.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        maintainer.update(batch.toDF(), epochId)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.Calibration
@@ -41,9 +40,12 @@ import graft.operators.Calibration
   * self-heal by re-folding, so it reloads instead (the r13 advice fix,
   * built in here from the start).
   */
-object CalibrationStream {
+object CalibrationStream extends StreamTwin {
 
   final case class ScoredDoc(doc_id: Long, score: Long, y: Long)
+
+  type In = ScoredDoc
+  type Mt = Maintainer
 
   private val binsSchema = StructType(Seq(
     StructField("bin", LongType),
@@ -52,17 +54,15 @@ object CalibrationStream {
 
   final class Maintainer(
       spark: SparkSession,
-      val stateDir: Option[String] = None,
+      stateDir: Option[String] = None,
       compactEvery: Int = 8,
       bins: Int = 10,
       lo: Long = -1000L,
       hi: Long = 1000L
-  ) {
+  ) extends EpochMaintainer(
+        spark, stateDir, Seq("bins" -> binsSchema),
+        new DeltaEpochStore(spark, _, _, compactEvery)) {
     require(bins > 0 && hi > lo, s"degenerate binning ($bins bins, [$lo, $hi])")
-
-    private val store: Option[DeltaEpochStore] =
-      stateDir.map(new DeltaEpochStore(
-        spark, _, Seq("bins" -> binsSchema), compactEvery))
 
     private def rowsToCounts(df: DataFrame): Map[Long, (Long, Long)] = {
       val m = df.collect()
@@ -85,18 +85,13 @@ object CalibrationStream {
     }
 
     // load: SUM compact + deltas per bin — the additive mirror
-    @volatile private var counts: Map[Long, (Long, Long)] = store
-      .flatMap(_.load())
-      .map(m => rowsToCounts(m("bins")))
-      .getOrElse(Map.empty)
+    @volatile private var counts: Map[Long, (Long, Long)] =
+      rowsToCounts(loadOrEmpty()("bins"))
 
     // the in-memory ledger (see scaladoc: durable-committed does not
     // imply in-memory-folded when save() fails after its marker)
     @volatile private var foldedEpoch: Long = store
       .map(_.latestCommitted).getOrElse(-1L)
-
-    /** True iff construction reloaded a persisted epoch (restart path). */
-    def resumed: Boolean = store.exists(_.latestCommitted >= 0)
 
     /** The live per-bin (n_pos, n_docs) counts folded so far. */
     def state: Map[Long, (Long, Long)] = counts
@@ -128,17 +123,14 @@ object CalibrationStream {
       else m.toSeq.map { case (b, (p, d)) => (b, p, d) }.toDF("bin", "n_pos", "n_docs")
     }
 
-    private[graft] def update(batch: DataFrame, epochId: Long = -1L): Unit = {
+    private[graft] def update(batch: DataFrame, epochId: Long): Unit = {
       // the additive replay guard + resync pair — see PcaStream.update
       // for the full argument (ledger no-op for genuine replays; behind
       // falls through to save()'s loud IllegalStateException; durable-
       // but-unfolded resyncs from the store)
       if (epochId >= 0 && store.exists(_.latestCommitted == epochId)) {
         if (foldedEpoch != epochId) {
-          counts = store
-            .flatMap(_.load())
-            .map(m => rowsToCounts(m("bins")))
-            .getOrElse(Map.empty)
+          counts = rowsToCounts(loadOrEmpty()("bins"))
           foldedEpoch = epochId
         }
         return
@@ -155,28 +147,4 @@ object CalibrationStream {
     }
   }
 
-  /** Start the maintainer over a streaming Dataset[ScoredDoc]; call
-    * `maintainer.fit()` between batches for the live calibration map.
-    */
-  def start(
-      stream: Dataset[ScoredDoc],
-      maintainer: Maintainer,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      allowVolatileState: Boolean = false
-  ): StreamingQuery = {
-    require(
-      checkpoint.isEmpty || maintainer.stateDir.nonEmpty || allowVolatileState,
-      "checkpointLocation set but the Maintainer has no stateDir: a restart " +
-        "would skip committed batches against zero counts and serve a fit " +
-        "over a silently partial corpus. Pass a stateDir (persisted state) " +
-        "or allowVolatileState = true if the checkpoint is known fresh.")
-    val writer = stream.toDF.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        maintainer.update(batch.toDF(), epochId)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.Cluster
@@ -65,9 +64,12 @@ import graft.operators.Cluster
   * (truncated lineage, the §8.9 rule) so batch i's plan does not re-plan
   * batches 1..i−1.
   */
-object ComponentsStream {
+object ComponentsStream extends StreamTwin {
 
   final case class Edge(a_id: Long, b_id: Long)
+
+  type In = Edge
+  type Mt = Maintainer
 
   private val labelSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),
@@ -84,18 +86,10 @@ object ComponentsStream {
     * (the previous one backs the mid-write crash case). When None,
     * labels live only in driver memory and do NOT survive a restart.
     */
-  final class Maintainer(spark: SparkSession, val stateDir: Option[String] = None) {
+  final class Maintainer(spark: SparkSession, stateDir: Option[String] = None)
+      extends EpochMaintainer(spark, stateDir, Seq("labels" -> labelSchema), new EpochStore(spark, _, _)) {
 
-    private val store: Option[EpochStore] =
-      stateDir.map(new EpochStore(spark, _, Seq("labels" -> labelSchema)))
-
-    @volatile private var labels: DataFrame = store
-      .flatMap(_.load())
-      .getOrElse(EpochStore.emptyFrames(spark, Seq("labels" -> labelSchema)))
-      .apply("labels")
-
-    /** True iff construction reloaded a persisted epoch (restart path). */
-    def resumed: Boolean = store.exists(_.latestCommitted >= 0)
+    @volatile private var labels: DataFrame = loadOrEmpty()("labels")
 
     /** Current (id, comp) snapshot — after batch i, ≡ batch CC over every
       * edge of batches 1..i (plus self-loop singletons).
@@ -107,7 +101,7 @@ object ComponentsStream {
       * GC of epochs < previous-committed last — the write order the crash
       * matrix in the object scaladoc relies on.
       */
-    private[streaming] def update(newEdges: DataFrame, epochId: Long): Unit = {
+    private[graft] def update(newEdges: DataFrame, epochId: Long): Unit = {
       val star = labels
         .where(col("id") =!= col("comp"))
         .select(col("id").as("a_id"), col("comp").as("b_id"))
@@ -126,37 +120,4 @@ object ComponentsStream {
     }
   }
 
-  /** Start the maintainer over a streaming Dataset[Edge]. The returned
-    * query drives `maintainer.update` once per micro-batch; read
-    * `maintainer.current` between batches for the live labels.
-    *
-    * Reusing a checkpoint with a memory-only Maintainer silently loses
-    * every previously-folded component (Spark skips committed batches;
-    * the labels restart empty) — so that combination throws unless
-    * `allowVolatileState = true`.
-    */
-  def start(
-      edges: Dataset[Edge],
-      maintainer: Maintainer,
-      checkpoint: Option[String] = None,
-      // a LONG-RUNNING maintainer by default (AvailableNow would fold
-      // what exists at start and terminate — right for backfill, wrong
-      // for the live-labels contract)
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      allowVolatileState: Boolean = false
-  ): StreamingQuery = {
-    require(
-      checkpoint.isEmpty || maintainer.stateDir.nonEmpty || allowVolatileState,
-      "checkpointLocation set but the Maintainer has no stateDir: a restart " +
-        "would skip committed batches against empty labels and silently lose " +
-        "components. Pass a stateDir (persisted labels) or " +
-        "allowVolatileState = true if the checkpoint is known fresh.")
-    val writer = edges.toDF.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        maintainer.update(batch.toDF(), epochId)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Curation
@@ -48,9 +47,12 @@ import graft.operators.Curation
   * [[Curation.curate]] over batches 1..i after every batch, including
   * cross-batch demotions), double-fold no-ops, and restart resume.
   */
-object CurationStream {
+object CurationStream extends StreamTwin {
 
   final case class Doc(doc_id: Long, source: String, text: String)
+
+  type In = Doc
+  type Mt = Maintainer
 
   private val keptSchema = StructType(Seq(
     StructField("text_md5", StringType),
@@ -70,20 +72,11 @@ object CurationStream {
   final class Maintainer(
       spark: SparkSession,
       cap: Int = 10,
-      val stateDir: Option[String] = None,
+      stateDir: Option[String] = None,
       screen: DataFrame => DataFrame = Curation.screened
-  ) {
+  ) extends EpochMaintainer(spark, stateDir, Seq("kept" -> keptSchema), new EpochStore(spark, _, _)) {
 
-    private val store: Option[EpochStore] =
-      stateDir.map(new EpochStore(spark, _, Seq("kept" -> keptSchema)))
-
-    @volatile private var kept: DataFrame = store
-      .flatMap(_.load())
-      .getOrElse(EpochStore.emptyFrames(spark, Seq("kept" -> keptSchema)))
-      .apply("kept")
-
-    /** True iff construction reloaded a persisted epoch (restart path). */
-    def resumed: Boolean = store.exists(_.latestCommitted >= 0)
+    @volatile private var kept: DataFrame = loadOrEmpty()("kept")
 
     /** The survivor table: one row per distinct screen-passing text. */
     def state: DataFrame = kept
@@ -93,7 +86,7 @@ object CurationStream {
       */
     def selection: DataFrame = Curation.select(kept, cap)
 
-    private[graft] def update(batch: DataFrame, epochId: Long = -1L): Unit = {
+    private[graft] def update(batch: DataFrame, epochId: Long): Unit = {
       val s =
         screen(batch.select(col("doc_id").cast(LongType), col("source"), col("text")))
           .select(col("text_md5"), col("doc_id"), col("source"), col("lang_pred"), col("n_tokens"))
@@ -113,28 +106,4 @@ object CurationStream {
     }
   }
 
-  /** Start the maintainer over a streaming Dataset[Doc]; read
-    * `maintainer.selection` between batches for the live curated set.
-    */
-  def start(
-      docs: Dataset[Doc],
-      maintainer: Maintainer,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      allowVolatileState: Boolean = false
-  ): StreamingQuery = {
-    require(
-      checkpoint.isEmpty || maintainer.stateDir.nonEmpty || allowVolatileState,
-      "checkpointLocation set but the Maintainer has no stateDir: a restart " +
-        "would skip committed batches against an empty survivor table and " +
-        "silently lose kept texts. Pass a stateDir (persisted state) or " +
-        "allowVolatileState = true if the checkpoint is known fresh.")
-    val writer = docs.toDF.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        maintainer.update(batch.toDF(), epochId)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
 }

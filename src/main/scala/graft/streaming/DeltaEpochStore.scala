@@ -49,7 +49,7 @@ final class DeltaEpochStore(
     dir: String,
     frames: Seq[(String, StructType)],
     compactEvery: Int = 8
-) {
+) extends EpochLedger {
   require(compactEvery >= 1, s"compactEvery must be >= 1, got $compactEvery")
 
   private def fs(p: Path): FileSystem =

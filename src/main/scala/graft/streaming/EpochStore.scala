@@ -30,7 +30,7 @@ final class EpochStore(
     spark: SparkSession,
     dir: String,
     frames: Seq[(String, StructType)]
-) {
+) extends EpochLedger {
 
   private def fs(p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)

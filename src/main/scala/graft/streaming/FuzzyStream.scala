@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Fuzzy
@@ -58,9 +57,12 @@ import graft.operators.Fuzzy
   * variant index never reshuffles; at rest it is bucketed parquet keyed
   * by `v` (the [[graft.operators.Colocate]] posture).
   */
-object FuzzyStream {
+object FuzzyStream extends StreamTwin {
 
   final case class Str(s: String)
+
+  type In = Str
+  type Mt = Maintainer
 
   private val stringsSchema = StructType(Seq(StructField("s", StringType)))
   private val variantsSchema = StructType(Seq(
@@ -79,23 +81,15 @@ object FuzzyStream {
   final class Maintainer(
       spark: SparkSession,
       minLen: Int = 2,
-      val stateDir: Option[String] = None,
+      stateDir: Option[String] = None,
       compactEvery: Int = 8
-  ) {
+  ) extends EpochMaintainer(spark, stateDir, frames, new DeltaEpochStore(spark, _, _, compactEvery)) {
 
-    private val store: Option[DeltaEpochStore] =
-      stateDir.map(new DeltaEpochStore(spark, _, frames, compactEvery))
-
-    @volatile private var state: Map[String, DataFrame] = store
-      .flatMap(_.load())
-      // raw compact+delta unions → keep-one distinct per frame (all
-      // three frames are sets; replay deltas are duplicates of committed
-      // rows, so distinct IS the merge)
-      .map(m => m.map { case (k, v) => k -> v.distinct().localCheckpoint(true) })
-      .getOrElse(EpochStore.emptyFrames(spark, frames))
-
-    /** True iff construction reloaded a persisted epoch (restart path). */
-    def resumed: Boolean = store.exists(_.latestCommitted >= 0)
+    // raw compact+delta unions → keep-one distinct per frame (all three
+    // frames are sets; replay deltas are duplicates of committed rows,
+    // so distinct IS the merge)
+    @volatile private var state: Map[String, DataFrame] =
+      loadOrEmpty(_.map { case (k, v) => k -> v.distinct().localCheckpoint(true) })
 
     /** The distinct value domain folded so far. */
     def strings: DataFrame = state("strings")
@@ -109,7 +103,7 @@ object FuzzyStream {
       */
     def pairs: DataFrame = state("pairs")
 
-    private[graft] def update(batch: DataFrame, epochId: Long = -1L): Unit = {
+    private[graft] def update(batch: DataFrame, epochId: Long): Unit = {
       // the batch's genuinely-new strings: a replayed batch anti-joins
       // to EMPTY, so the whole update is a no-op before any mining runs
       val newStrings = Fuzzy
@@ -153,28 +147,4 @@ object FuzzyStream {
     }
   }
 
-  /** Start the maintainer over a streaming Dataset[Str]; read
-    * `maintainer.pairs` between batches for the monotone pair set.
-    */
-  def start(
-      strs: Dataset[Str],
-      maintainer: Maintainer,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      allowVolatileState: Boolean = false
-  ): StreamingQuery = {
-    require(
-      checkpoint.isEmpty || maintainer.stateDir.nonEmpty || allowVolatileState,
-      "checkpointLocation set but the Maintainer has no stateDir: a restart " +
-        "would skip committed batches against an empty domain and silently " +
-        "miss (or re-emit) pairs. Pass a stateDir (persisted state) or " +
-        "allowVolatileState = true if the checkpoint is known fresh.")
-    val writer = strs.toDF.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        maintainer.update(batch.toDF(), epochId)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
 }

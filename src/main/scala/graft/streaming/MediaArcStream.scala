@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.functions.GraftFunctions
@@ -54,9 +53,12 @@ import graft.operators.{LinearModel, MediaArc}
   * interleaving of the four saves heals by re-fold — the [[ArcStream]]
   * cross-store argument, extended by two stores.
   */
-object MediaArcStream {
+object MediaArcStream extends StreamTwin {
 
   final case class Doc(doc_id: Long, source: String, text: String)
+
+  type In = Doc
+  type Mt = Maintainer
 
   private val imagesSchema = StructType(Seq(
     StructField("img_id", LongType),
@@ -114,8 +116,11 @@ object MediaArcStream {
       minIsoPpm: Long = 500000L,
       trainDim: Int = 512,
       trainRounds: Int = 3,
-      val stateDir: Option[String] = None
-  ) {
+      stateDir: Option[String] = None
+  ) extends EpochMaintainer(
+        spark, stateDir,
+        Seq("images" -> imagesSchema, "imgBands" -> bandsSchema, "imgPairs" -> pairsSchema),
+        (d, frames) => new EpochStore(spark, s"$d/images", frames)) {
     GraftFunctions.register(spark)
 
     private[graft] val text = new ArcStream.Maintainer(
@@ -123,14 +128,7 @@ object MediaArcStream {
       trainDim = trainDim, trainRounds = trainRounds,
       stateDir = stateDir.map(d => s"$d/text"))
 
-    private val frameSchemas = Seq(
-      "images" -> imagesSchema, "imgBands" -> bandsSchema,
-      "imgPairs" -> pairsSchema)
-    private val store: Option[EpochStore] =
-      stateDir.map(d => new EpochStore(spark, s"$d/images", frameSchemas))
-    private val initial: Map[String, DataFrame] = store
-      .flatMap(_.load())
-      .getOrElse(EpochStore.emptyFrames(spark, frameSchemas))
+    private val initial: Map[String, DataFrame] = loadOrEmpty()
 
     // the clip routes (audio + video) need only their decoded-stats
     // tables: both dedups are EXACT (fingerprint / signature), so the
@@ -144,9 +142,6 @@ object MediaArcStream {
     private val clipInitial: Map[String, DataFrame] = clipStore
       .flatMap(_.load())
       .getOrElse(EpochStore.emptyFrames(spark, clipSchemas))
-
-    /** True iff construction reloaded a persisted epoch (restart path). */
-    def resumed: Boolean = store.exists(_.latestCommitted >= 0)
 
     @volatile private var images: DataFrame = initial("images")
     @volatile private var imgBands: DataFrame = initial("imgBands")
@@ -170,7 +165,7 @@ object MediaArcStream {
         .select(col("band_id"), col("band_val"), col("img_id"))
     }
 
-    private[graft] def update(batch: DataFrame, epochId: Long = -1L): Unit = {
+    private[graft] def update(batch: DataFrame, epochId: Long): Unit = {
       text.update(batch, epochId)
       // one walk+decode pass over the delivery, map-side gate included
       val gated = MediaArc
@@ -271,28 +266,4 @@ object MediaArcStream {
     }
   }
 
-  /** Start the maintainer over a streaming Dataset[Doc]; read
-    * `maintainer.curated()` between batches for the live pair set.
-    */
-  def start(
-      docs: Dataset[Doc],
-      maintainer: Maintainer,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      allowVolatileState: Boolean = false
-  ): StreamingQuery = {
-    require(
-      checkpoint.isEmpty || maintainer.stateDir.nonEmpty || allowVolatileState,
-      "checkpointLocation set but the Maintainer's state is memory-only: a " +
-        "restart would skip committed batches against an empty corpus and " +
-        "silently lose the kept set. Pass a stateDir (persisted state) or " +
-        "allowVolatileState = true if the checkpoint is known fresh.")
-    val writer = docs.toDF.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        maintainer.update(batch.toDF(), epochId)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
 }

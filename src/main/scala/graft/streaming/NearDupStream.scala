@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.functions.GraftFunctions
@@ -54,10 +53,40 @@ import graft.operators.Dedup
   * replay (re-folding docs whose md5 classes already exist adds no new
   * reps, no new bands, and the emission delta for them dedups against
   * `members`).
+  *
+  * RESTART SAFETY: with a `stateDir` the Maintainer persists all six
+  * frames per epoch through [[EpochStore]] (every frame first, one
+  * commit marker second, GC to two epochs); the fold's replay guard
+  * (left_anti on `members`) makes a marker-but-no-offset replay a
+  * no-op, and a mid-epoch crash falls back one epoch and re-folds.
   */
-object NearDupStream {
+object NearDupStream extends StreamTwin {
 
   final case class Doc(doc_id: Long, text: String)
+
+  type In = Doc
+  type Mt = Maintainer
+
+  // the six state frames, schema-declared once for both the fresh
+  // empties and the EpochStore restart loader
+  private val frameSchemas: Seq[(String, StructType)] = Seq(
+    "classes" -> StructType(Seq(
+      StructField("text_md5", StringType), StructField("rep_id", LongType),
+      StructField("shingled", org.apache.spark.sql.types.BooleanType))),
+    "members" -> StructType(Seq(
+      StructField("rep_id", LongType), StructField("member_id", LongType))),
+    "bandIndex" -> StructType(Seq(
+      StructField("band_id", org.apache.spark.sql.types.IntegerType),
+      StructField("band_hash", LongType), StructField("rep_id", LongType))),
+    "repShingles" -> StructType(Seq(
+      StructField("rep_id", LongType),
+      StructField("sh", org.apache.spark.sql.types.ArrayType(StringType)))),
+    "repPairs" -> StructType(Seq(
+      StructField("a_rep", LongType), StructField("b_rep", LongType),
+      StructField("jac", DoubleType))),
+    "allPairs" -> StructType(Seq(
+      StructField("a_id", LongType), StructField("b_id", LongType),
+      StructField("jac", DoubleType))))
 
   final class Maintainer(
       spark: SparkSession,
@@ -65,38 +94,10 @@ object NearDupStream {
       threshold: Double = 0.5,
       bands: Int = 16,
       rowsPerBand: Int = 8,
-      val stateDir: Option[String] = None
-  ) {
+      stateDir: Option[String] = None
+  ) extends EpochMaintainer(spark, stateDir, frameSchemas, new EpochStore(spark, _, _)) {
 
-    // the six state frames, schema-declared once for both the fresh
-    // empties and the EpochStore restart loader
-    private val frameSchemas: Seq[(String, StructType)] = Seq(
-      "classes" -> StructType(Seq(
-        StructField("text_md5", StringType), StructField("rep_id", LongType),
-        StructField("shingled", org.apache.spark.sql.types.BooleanType))),
-      "members" -> StructType(Seq(
-        StructField("rep_id", LongType), StructField("member_id", LongType))),
-      "bandIndex" -> StructType(Seq(
-        StructField("band_id", org.apache.spark.sql.types.IntegerType),
-        StructField("band_hash", LongType), StructField("rep_id", LongType))),
-      "repShingles" -> StructType(Seq(
-        StructField("rep_id", LongType),
-        StructField("sh", org.apache.spark.sql.types.ArrayType(StringType)))),
-      "repPairs" -> StructType(Seq(
-        StructField("a_rep", LongType), StructField("b_rep", LongType),
-        StructField("jac", DoubleType))),
-      "allPairs" -> StructType(Seq(
-        StructField("a_id", LongType), StructField("b_id", LongType),
-        StructField("jac", DoubleType))))
-
-    private val store: Option[EpochStore] =
-      stateDir.map(new EpochStore(spark, _, frameSchemas))
-    private val initial: Map[String, DataFrame] = store
-      .flatMap(_.load())
-      .getOrElse(EpochStore.emptyFrames(spark, frameSchemas))
-
-    /** True iff construction reloaded a persisted epoch (restart path). */
-    def resumed: Boolean = store.exists(_.latestCommitted >= 0)
+    private val initial: Map[String, DataFrame] = loadOrEmpty()
 
     @volatile private var classes: DataFrame = initial("classes")
     @volatile private var members: DataFrame = initial("members")
@@ -125,7 +126,7 @@ object NearDupStream {
       */
     private[streaming] def verifiedRepPairs: DataFrame = repPairs
 
-    private[graft] def update(newDocs: DataFrame, epochId: Long = -1L): Unit = {
+    private[graft] def update(newDocs: DataFrame, epochId: Long): Unit = {
       GraftFunctions.register(spark)
       val b = newDocs
         .select(col("doc_id").cast(LongType), col("text"))
@@ -246,39 +247,4 @@ object NearDupStream {
     }
   }
 
-  /** Start the maintainer over a streaming Dataset[Doc]; read
-    * `maintainer.pairs` between batches for the accumulated near-dup set
-    * and `maintainer.index` for the live band postings.
-    *
-    * RESTART SAFETY: with a `stateDir` the Maintainer persists all six
-    * frames per epoch through [[EpochStore]] (every frame first, one
-    * commit marker second, GC to two epochs); the fold's replay guard
-    * (left_anti on `members`) makes a marker-but-no-offset replay a
-    * no-op, and a mid-epoch crash falls back one epoch and re-folds. A
-    * memory-only Maintainer against an existing checkpoint would skip
-    * committed batches into an empty index and silently lose pairs — the
-    * [[ComponentsStream]] restart trap — so that combination is refused
-    * unless `allowVolatileState = true`.
-    */
-  def start(
-      docs: Dataset[Doc],
-      maintainer: Maintainer,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      allowVolatileState: Boolean = false
-  ): StreamingQuery = {
-    require(
-      checkpoint.isEmpty || maintainer.stateDir.nonEmpty || allowVolatileState,
-      "checkpointLocation set but the Maintainer's index is memory-only: a " +
-        "restart would skip committed batches against an empty index and " +
-        "silently lose pairs. Pass a stateDir (persisted index) or " +
-        "allowVolatileState = true if the checkpoint is known fresh.")
-    val writer = docs.toDF.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        maintainer.update(batch.toDF(), epochId)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
 }

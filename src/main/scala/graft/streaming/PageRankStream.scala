@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.PageRank
@@ -19,14 +17,9 @@ import graft.operators.PageRank
   * from it inside [[PageRank.integerPageRank]], so nothing in state can
   * drift from the edges across restarts.
   *
-  * The fold is union + distinct keyed by the edge: the per-batch DELTA
-  * is the batch's own distinct edge set (recomputed from the batch
-  * alone — NOT an anti-join against state — so a replayed batch after a
-  * failed save re-derives the identical delta), and the distinct merge
-  * makes replayed rows collapse instead of duplicating: the idempotent
-  * fold the EpochStore crash matrix requires. Durable state still only
-  * advances save-first (compute → persist → swap), the FuzzyStream
-  * ordering discipline.
+  * The fold is the [[EventSetMaintainer]]'s union + distinct keyed by
+  * the edge: replayed rows collapse instead of duplicating, and durable
+  * state advances save-first.
   *
   * EMISSION IS VIEW-FORCED — the taxonomy's far end, recorded
   * deliberately as the contrast with the append-only twins (FuzzyStream
@@ -39,13 +32,10 @@ import graft.operators.PageRank
   * rounds, bit-identical, engine-portable) over current state — stream ≡
   * batch by shared code, not a parallel reimplementation.
   *
-  * RESTART SAFETY — the [[DeltaEpochStore]] contract (edges GROW with
-  * the stream, so full-frame persistence would write O(graph) per
-  * micro-batch): per-epoch deltas (data first, marker second),
-  * compaction every K, loader re-applies the same distinct merge over
-  * compact + deltas. `start()` refuses a checkpoint without a stateDir
-  * unless `allowVolatileState = true` (a restart would rank a silently
-  * partial graph).
+  * RESTART SAFETY — the [[DeltaEpochStore]] contract of the
+  * [[EventSetMaintainer]] (edges GROW with the stream). `start()` refuses
+  * a checkpoint without a stateDir unless `allowVolatileState = true` (a
+  * restart would rank a silently partial graph).
   *
   * 100 TB shape: the fold is one edge-keyed distinct per batch (delta
   * tiny against state); each rank query is x46's audited plan — one
@@ -55,9 +45,12 @@ import graft.operators.PageRank
   * [[graft.operators.Colocate]] posture) so repeated rank queries reuse
   * the write-time partitioning.
   */
-object PageRankStream {
+object PageRankStream extends StreamTwin {
 
   final case class Edge(src: Long, dst: Long)
+
+  type In = Edge
+  type Mt = Maintainer
 
   private val edgesSchema = StructType(Seq(
     StructField("src", LongType),
@@ -65,72 +58,15 @@ object PageRankStream {
 
   final class Maintainer(
       spark: SparkSession,
-      val stateDir: Option[String] = None,
+      stateDir: Option[String] = None,
       compactEvery: Int = 8
-  ) {
-
-    private val store: Option[DeltaEpochStore] =
-      stateDir.map(new DeltaEpochStore(spark, _, Seq("edges" -> edgesSchema), compactEvery))
-
-    @volatile private var edges: DataFrame = store
-      .flatMap(_.load())
-      // raw compact+delta union → the same distinct merge the fold uses
-      .map(m => m("edges").distinct().localCheckpoint(true))
-      .getOrElse(EpochStore
-        .emptyFrames(spark, Seq("edges" -> edgesSchema))
-        .apply("edges"))
-
-    /** True iff construction reloaded a persisted epoch (restart path). */
-    def resumed: Boolean = store.exists(_.latestCommitted >= 0)
-
-    /** The live distinct edge list folded so far. */
-    def state: DataFrame = edges
+  ) extends EventSetMaintainer(spark, stateDir, "edges", edgesSchema, compactEvery) {
 
     /** Current integer PageRank over everything folded so far — the
       * batch twin's output through the batch twin's own ranker
       * (view-forced emission; see the scaladoc taxonomy note).
       */
     def ranks(iters: Int = 3, scaleUnits: Long = 1000000000000L): DataFrame =
-      PageRank.integerPageRank(edges, iters = iters, scaleUnits = scaleUnits)
-
-    private[graft] def update(batch: DataFrame, epochId: Long = -1L): Unit = {
-      // delta from the batch ALONE: replay after a failed save re-derives
-      // the identical rows, and the distinct merge collapses them
-      val delta = batch
-        .select(col("src").cast(LongType), col("dst").cast(LongType))
-        .distinct()
-        .localCheckpoint(true)
-      val newEdges = edges.unionByName(delta).distinct().localCheckpoint(true)
-      // save BEFORE the in-memory swap (the FuzzyStream ordering): a
-      // failed save leaves pre-batch state, and the replayed epoch
-      // recommits the same delta
-      store.foreach(_.save(epochId, Map("edges" -> delta), Map("edges" -> newEdges)))
-      edges = newEdges
-    }
-  }
-
-  /** Start the maintainer over a streaming Dataset[Edge]; call
-    * `maintainer.ranks()` between batches for the live centrality view.
-    */
-  def start(
-      stream: Dataset[Edge],
-      maintainer: Maintainer,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      allowVolatileState: Boolean = false
-  ): StreamingQuery = {
-    require(
-      checkpoint.isEmpty || maintainer.stateDir.nonEmpty || allowVolatileState,
-      "checkpointLocation set but the Maintainer has no stateDir: a restart " +
-        "would skip committed batches against an empty edge list and rank a " +
-        "silently partial graph. Pass a stateDir (persisted state) or " +
-        "allowVolatileState = true if the checkpoint is known fresh.")
-    val writer = stream.toDF.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        maintainer.update(batch.toDF(), epochId)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
+      PageRank.integerPageRank(state, iters = iters, scaleUnits = scaleUnits)
   }
 }

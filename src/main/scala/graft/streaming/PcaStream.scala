@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 import graft.functions.GraftFunctions
@@ -42,9 +41,12 @@ import graft.operators.Pca
   * fold) instead of distinct-unioning them. Compaction still bounds the
   * chain, though every frame is one row.
   */
-object PcaStream {
+object PcaStream extends StreamTwin {
 
   final case class Embedding(vec_id: Long, embedding: Array[Float])
+
+  type In = Embedding
+  type Mt = Maintainer
 
   private val momentsSchema = StructType(Seq(
     StructField("n", LongType),
@@ -69,14 +71,12 @@ object PcaStream {
 
   final class Maintainer(
       spark: SparkSession,
-      val stateDir: Option[String] = None,
+      stateDir: Option[String] = None,
       compactEvery: Int = 8,
       dim: Int = 64
-  ) {
-
-    private val store: Option[DeltaEpochStore] =
-      stateDir.map(new DeltaEpochStore(
-        spark, _, Seq("moments" -> momentsSchema), compactEvery))
+  ) extends EpochMaintainer(
+        spark, stateDir, Seq("moments" -> momentsSchema),
+        new DeltaEpochStore(spark, _, _, compactEvery)) {
 
     private def rowsToMoments(df: DataFrame): Moments =
       df.collect().foldLeft(empty) { (acc, r) =>
@@ -88,10 +88,7 @@ object PcaStream {
 
     // load: SUM compact + deltas — the additive mirror of the
     // event-set twins' distinct merge
-    @volatile private var moments: Moments = store
-      .flatMap(_.load())
-      .map(m => rowsToMoments(m("moments")))
-      .getOrElse(empty)
+    @volatile private var moments: Moments = rowsToMoments(loadOrEmpty()("moments"))
 
     // the IN-MEMORY ledger: last epoch actually folded into `moments`.
     // Durable-committed does NOT imply in-memory-folded — save() can
@@ -100,9 +97,6 @@ object PcaStream {
     // guard must not trust the durable ledger alone (see update()).
     @volatile private var foldedEpoch: Long = store
       .map(_.latestCommitted).getOrElse(-1L)
-
-    /** True iff construction reloaded a persisted epoch (restart path). */
-    def resumed: Boolean = store.exists(_.latestCommitted >= 0)
 
     /** The live moment triple folded so far. */
     def state: Moments = moments
@@ -145,7 +139,7 @@ object PcaStream {
       else Seq((m.n, m.s.toSeq, m.g.toSeq)).toDF("n", "s", "g")
     }
 
-    private[graft] def update(batch: DataFrame, epochId: Long = -1L): Unit = {
+    private[graft] def update(batch: DataFrame, epochId: Long): Unit = {
       // THE ADDITIVE DIFFERENCE from the event-set twins: their distinct
       // merge collapses a replayed committed batch for free; an additive
       // fold would DOUBLE it. The store's epoch ledger is the idempotence
@@ -165,10 +159,7 @@ object PcaStream {
         // fold cannot self-heal by re-folding (it would double), so
         // resync from durable state, which IS complete through epochId.
         if (foldedEpoch != epochId) {
-          moments = store
-            .flatMap(_.load())
-            .map(m => rowsToMoments(m("moments")))
-            .getOrElse(empty)
+          moments = rowsToMoments(loadOrEmpty()("moments"))
           foldedEpoch = epochId
         }
         return
@@ -187,29 +178,4 @@ object PcaStream {
     }
   }
 
-  /** Start the maintainer over a streaming Dataset[Embedding]; call
-    * `maintainer.component()` between batches for the live rotation.
-    */
-  def start(
-      stream: Dataset[Embedding],
-      maintainer: Maintainer,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      allowVolatileState: Boolean = false
-  ): StreamingQuery = {
-    require(
-      checkpoint.isEmpty || maintainer.stateDir.nonEmpty || allowVolatileState,
-      "checkpointLocation set but the Maintainer has no stateDir: a restart " +
-        "would skip committed batches against zero moments and serve a " +
-        "component over a silently partial corpus. Pass a stateDir " +
-        "(persisted state) or allowVolatileState = true if the checkpoint " +
-        "is known fresh.")
-    val writer = stream.toDF.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        maintainer.update(batch.toDF(), epochId)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
 }

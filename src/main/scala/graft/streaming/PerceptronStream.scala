@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.LinearModel
@@ -22,14 +20,9 @@ import graft.operators.LinearModel
   * [[LinearModel.trainPerceptron]], so nothing in state can drift from
   * the examples across restarts.
   *
-  * The fold is union + distinct keyed by the full row: the per-batch
-  * DELTA is the batch's own distinct rows (recomputed from the batch
-  * alone — NOT an anti-join against state — so a replayed batch after a
-  * failed save re-derives the identical delta), and the distinct merge
-  * collapses replayed rows instead of duplicating them: the idempotent
-  * fold the EpochStore crash matrix requires. Durable state advances
-  * save-first (compute → persist → swap), the FuzzyStream ordering
-  * discipline.
+  * The fold is the [[EventSetMaintainer]]'s union + distinct keyed by
+  * the full row: replayed rows collapse instead of duplicating, and
+  * durable state advances save-first.
   *
   * EMISSION IS VIEW-FORCED — the PageRankStream end of the taxonomy,
   * for the same structural reason: the batch perceptron's round-r
@@ -46,13 +39,11 @@ import graft.operators.LinearModel
   * stream can reproduce; the batch formulation is the one that admits a
   * stream twin at all.
   *
-  * RESTART SAFETY — the [[DeltaEpochStore]] contract (the training set
-  * GROWS with the stream, so full-frame persistence would write
-  * O(corpus) per micro-batch): per-epoch deltas (data first, marker
-  * second), compaction every K, loader re-applies the same distinct
-  * merge over compact + deltas. `start()` refuses a checkpoint without
-  * a stateDir unless `allowVolatileState = true` (a restart would train
-  * on a silently partial corpus).
+  * RESTART SAFETY — the [[DeltaEpochStore]] contract of the
+  * [[EventSetMaintainer]] (the training set GROWS with the stream).
+  * `start()` refuses a checkpoint without a stateDir unless
+  * `allowVolatileState = true` (a restart would train on a silently
+  * partial corpus).
   *
   * 100 TB shape: the fold is one row-keyed distinct per batch (delta
   * tiny against state); each training query is x128's audited plan —
@@ -61,9 +52,12 @@ import graft.operators.LinearModel
   * + one bucket-keyed delta aggregation per round, weights bounded
   * driver state (dim longs, the k-means-codebook contract).
   */
-object PerceptronStream {
+object PerceptronStream extends StreamTwin {
 
   final case class Example(doc_id: Long, text: String, y: Long)
+
+  type In = Example
+  type Mt = Maintainer
 
   private val examplesSchema = StructType(Seq(
     StructField("doc_id", LongType),
@@ -72,26 +66,9 @@ object PerceptronStream {
 
   final class Maintainer(
       spark: SparkSession,
-      val stateDir: Option[String] = None,
+      stateDir: Option[String] = None,
       compactEvery: Int = 8
-  ) {
-
-    private val store: Option[DeltaEpochStore] =
-      stateDir.map(new DeltaEpochStore(spark, _, Seq("examples" -> examplesSchema), compactEvery))
-
-    @volatile private var examples: DataFrame = store
-      .flatMap(_.load())
-      // raw compact+delta union → the same distinct merge the fold uses
-      .map(m => m("examples").distinct().localCheckpoint(true))
-      .getOrElse(EpochStore
-        .emptyFrames(spark, Seq("examples" -> examplesSchema))
-        .apply("examples"))
-
-    /** True iff construction reloaded a persisted epoch (restart path). */
-    def resumed: Boolean = store.exists(_.latestCommitted >= 0)
-
-    /** The live distinct labeled training set folded so far. */
-    def state: DataFrame = examples
+  ) extends EventSetMaintainer(spark, stateDir, "examples", examplesSchema, compactEvery) {
 
     /** Current trained weights over everything folded so far — the batch
       * twin's output through the batch twin's own trainer (view-forced
@@ -100,49 +77,6 @@ object PerceptronStream {
       * (the training curve, x128's audit signal).
       */
     def train(dim: Int = 512, rounds: Int = 3): (Array[Long], Seq[Long]) =
-      LinearModel.trainPerceptron(examples, "text", "y", dim = dim, rounds = rounds)
-
-    private[graft] def update(batch: DataFrame, epochId: Long = -1L): Unit = {
-      // delta from the batch ALONE: replay after a failed save re-derives
-      // the identical rows, and the distinct merge collapses them
-      val delta = batch
-        .select(
-          col("doc_id").cast(LongType),
-          col("text").cast(StringType),
-          col("y").cast(LongType))
-        .distinct()
-        .localCheckpoint(true)
-      val newExamples = examples.unionByName(delta).distinct().localCheckpoint(true)
-      // save BEFORE the in-memory swap (the FuzzyStream ordering): a
-      // failed save leaves pre-batch state, and the replayed epoch
-      // recommits the same delta
-      store.foreach(_.save(epochId, Map("examples" -> delta), Map("examples" -> newExamples)))
-      examples = newExamples
-    }
-  }
-
-  /** Start the maintainer over a streaming Dataset[Example]; call
-    * `maintainer.train()` between batches for the live model.
-    */
-  def start(
-      stream: Dataset[Example],
-      maintainer: Maintainer,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      allowVolatileState: Boolean = false
-  ): StreamingQuery = {
-    require(
-      checkpoint.isEmpty || maintainer.stateDir.nonEmpty || allowVolatileState,
-      "checkpointLocation set but the Maintainer has no stateDir: a restart " +
-        "would skip committed batches against an empty training set and " +
-        "train on a silently partial corpus. Pass a stateDir (persisted " +
-        "state) or allowVolatileState = true if the checkpoint is known fresh.")
-    val writer = stream.toDF.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        maintainer.update(batch.toDF(), epochId)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
+      LinearModel.trainPerceptron(state, "text", "y", dim = dim, rounds = rounds)
   }
 }

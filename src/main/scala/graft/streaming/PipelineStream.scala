@@ -21,8 +21,11 @@ import graft.sinks.ParquetSink
   * cron runs do.
   *
   * What streaming adds over cron (SURVEY.md §2.5): checkpointed batch ids
-  * give at-least-once with idempotent re-append detection hooks, and the
-  * trigger replaces the external scheduler. `clock` is injected so batch
+  * give at-least-once delivery, and the trigger replaces the external
+  * scheduler. The append is not idempotent: [[ParquetSink.append]] never
+  * checks for an existing `batch_id=N`, so a replay after a crash between
+  * the write and the commit log re-appends the batch (an exactly-once
+  * sink is ROADMAP item 1). `clock` is injected so batch
   * timestamps stay run-constant and tests stay deterministic (same reason
   * runBatch takes `batchDate`/`batchTime` instead of reading the wall
   * clock, §7.4).

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Retrieval
@@ -65,9 +64,12 @@ import graft.operators.Retrieval
   * RetrievalStreamSpec pins stream ≡ batch `bm25TopK` after every prefix,
   * double-fold no-ops, and restart resume.
   */
-object RetrievalStream {
+object RetrievalStream extends StreamTwin {
 
   final case class Doc(doc_id: Long, text: String)
+
+  type In = Doc
+  type Mt = Maintainer
 
   private val postingsSchema = StructType(Seq(
     StructField("term", StringType),
@@ -75,31 +77,23 @@ object RetrievalStream {
     StructField("len", LongType),
     StructField("tf", LongType)))
 
+  // DELTA-epoch persistence (not full-frame EpochStore): postings grow
+  // with the corpus, and rewriting them per micro-batch is O(corpus)
+  // writes per delivery at 100 TB. Each epoch persists the batch delta;
+  // every compactEvery epochs the merged state compacts and GCs the
+  // chain — amortized O(delta + state/K) writes per batch.
   final class Maintainer(
       spark: SparkSession,
-      val stateDir: Option[String] = None,
+      stateDir: Option[String] = None,
       compactEvery: Int = 8
-  ) {
+  ) extends EpochMaintainer(
+        spark, stateDir, Seq("postings" -> postingsSchema),
+        new DeltaEpochStore(spark, _, _, compactEvery)) {
 
-    // DELTA-epoch persistence (not full-frame EpochStore): postings grow
-    // with the corpus, and rewriting them per micro-batch is O(corpus)
-    // writes per delivery at 100 TB. Each epoch persists the batch delta;
-    // every compactEvery epochs the merged state compacts and GCs the
-    // chain — amortized O(delta + state/K) writes per batch.
-    private val store: Option[DeltaEpochStore] =
-      stateDir.map(new DeltaEpochStore(spark, _, Seq("postings" -> postingsSchema), compactEvery))
-
-    @volatile private var postings: DataFrame = store
-      .flatMap(_.load())
-      // the loader returns the RAW union (compact + deltas); apply the
-      // same keep-one merge the update fold uses, once, at load
-      .map(m => mergedPostings(m("postings")).localCheckpoint(true))
-      .getOrElse(EpochStore
-        .emptyFrames(spark, Seq("postings" -> postingsSchema))
-        .apply("postings"))
-
-    /** True iff construction reloaded a persisted epoch (restart path). */
-    def resumed: Boolean = store.exists(_.latestCommitted >= 0)
+    // the loader returns the RAW union (compact + deltas); apply the
+    // same keep-one merge the update fold uses, once, at load
+    @volatile private var postings: DataFrame = loadOrEmpty(m =>
+      Map("postings" -> mergedPostings(m("postings")).localCheckpoint(true)))("postings")
 
     /** The live index: one row per (term, doc_id) with len and tf. */
     def state: DataFrame = postings
@@ -122,7 +116,7 @@ object RetrievalStream {
         .agg(max(col("len")).as("len"), max(col("tf")).as("tf"))
         .select(col("term"), col("doc_id"), col("len"), col("tf"))
 
-    private[graft] def update(batch: DataFrame, epochId: Long = -1L): Unit = {
+    private[graft] def update(batch: DataFrame, epochId: Long): Unit = {
       val delta = Retrieval
         .postingsOf(batch.select(col("doc_id").cast(LongType), col("text")))
         .select(
@@ -135,28 +129,4 @@ object RetrievalStream {
     }
   }
 
-  /** Start the maintainer over a streaming Dataset[Doc]; call
-    * `maintainer.topK(queries)` between batches for the live ranking.
-    */
-  def start(
-      docs: Dataset[Doc],
-      maintainer: Maintainer,
-      checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L),
-      allowVolatileState: Boolean = false
-  ): StreamingQuery = {
-    require(
-      checkpoint.isEmpty || maintainer.stateDir.nonEmpty || allowVolatileState,
-      "checkpointLocation set but the Maintainer has no stateDir: a restart " +
-        "would skip committed batches against an empty postings index and " +
-        "silently rank over a partial corpus. Pass a stateDir (persisted " +
-        "state) or allowVolatileState = true if the checkpoint is known fresh.")
-    val writer = docs.toDF.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
-        maintainer.update(batch.toDF(), epochId)
-      }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
-  }
 }

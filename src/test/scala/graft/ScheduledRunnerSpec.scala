@@ -174,12 +174,12 @@ class ScheduledRunnerSpec extends SparkSpec {
   }
 
   test("main sizes its session from SPARK_GRAFT_CPUS, else the host's processors") {
-    assert(ScheduledRunner.cores(Map("SPARK_GRAFT_CPUS" -> "3")) === 3)
-    assert(ScheduledRunner.cores(Map("SPARK_GRAFT_CPUS" -> " 12 ")) === 12)
+    assert(GraftSession.cores(Map("SPARK_GRAFT_CPUS" -> "3")) === 3)
+    assert(GraftSession.cores(Map("SPARK_GRAFT_CPUS" -> " 12 ")) === 12)
     val host = Runtime.getRuntime.availableProcessors
-    assert(ScheduledRunner.cores(Map.empty) === host)
-    assert(ScheduledRunner.cores(Map("SPARK_GRAFT_CPUS" -> "")) === host)
-    intercept[NumberFormatException](ScheduledRunner.cores(Map("SPARK_GRAFT_CPUS" -> "eight")))
+    assert(GraftSession.cores(Map.empty) === host)
+    assert(GraftSession.cores(Map("SPARK_GRAFT_CPUS" -> "")) === host)
+    intercept[NumberFormatException](GraftSession.cores(Map("SPARK_GRAFT_CPUS" -> "eight")))
   }
 }
 
