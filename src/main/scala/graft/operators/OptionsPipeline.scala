@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.time.{LocalDate, LocalTime}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.Schemas
@@ -36,14 +36,14 @@ object OptionsPipeline {
 
   /** The parse as a pure PROJECTION — every string→typed conversion, no row
     * drops (those are [[dropUnparseable]], a cheap NULL-check filter over
-    * this frame's typed columns). Split so runBatch can persist THIS frame:
-    * all per-row string work (symbol tokenization, numeric casts, the
-    * DDMMYY date parse) is evaluated exactly once, at cache materialization,
-    * and every plan above the cache — the expiry-policy pre-pass, the main
-    * pass, the final sort's range sampler — touches only typed columns.
-    * Rows that fail [[Parse.mandatoryPresent]] are kept here (flag column
-    * `mandatory_ok`) because the reference's pass-1 expiry scan sees them
-    * too (main.py:128-141).
+    * this frame's typed columns). Split so runBatch can checkpoint THIS
+    * frame: all per-row string work (symbol tokenization, numeric casts,
+    * the DDMMYY date parse) is evaluated exactly once, in the checkpoint's
+    * job, and every plan above it — the main pass, the final sort's range
+    * sampler — touches only typed columns. Rows that fail
+    * [[Parse.mandatoryPresent]] are kept here (flag column `mandatory_ok`)
+    * because the reference's pass-1 expiry scan sees them too
+    * (main.py:128-141).
     */
   def parseColumns(raw: DataFrame): DataFrame =
     raw.select(
@@ -72,11 +72,20 @@ object OptionsPipeline {
 
   /** One scheduled run (reference main(), main.py:353-396).
     *
-    * The typed snapshot is persisted, and the returned frame is lazy and
-    * reads that cache whenever it runs, so runBatch cannot release it: the
-    * cache stays registered for the session (the registry's q13/q14). A
-    * caller that consumes the batch at once uses [[withBatch]], which
-    * releases it.
+    * The typed snapshot is checkpointed eagerly, and that checkpoint is the
+    * batch's one Spark job. The same job observes the parsed expiry set,
+    * the only driver-side decision input (reference pass 1,
+    * main.py:128-141): a few dozen dates, bounded by the listing calendar.
+    * Like the reference's pass 1, it is observed before the row drops, so
+    * rows missing other mandatory fields still contribute their expiry.
+    *
+    * Scale: the checkpoint is also a barrier. Every per-row string
+    * expression runs once, in its job, and the optimizer cannot push the
+    * parse and band filters below a source's own repartition into its scan
+    * stage (sources own their scan parallelism). Its blocks spill to disk,
+    * and it is no registered cache: the ContextCleaner frees them once the
+    * returned frame is unreachable. Then a broadcast delta join and one
+    * range-partitioned sort.
     *
     * @param rawTickers raw snapshot (Schemas.ticker shape, with src_seq)
     * @param state      previous sink rows (tail-N read-back; may be empty)
@@ -91,70 +100,23 @@ object OptionsPipeline {
       today: LocalDate,
       batchDate: LocalDate,
       batchTime: LocalTime
-  ): DataFrame = plan(persistTyped(rawTickers), state, policy, today, batchDate, batchTime)
-
-  /** [[runBatch]] for a caller that consumes the batch at once (the
-    * scheduled tick's sink append): `use` runs while the typed cache is
-    * live, and the cache is released when `use` returns or throws, so a
-    * resident stream holds no cache across ticks.
-    */
-  def withBatch[T](
-      rawTickers: DataFrame,
-      state: DataFrame,
-      policy: Policy,
-      today: LocalDate,
-      batchDate: LocalDate,
-      batchTime: LocalTime
-  )(use: DataFrame => T): T = {
-    val typed = persistTyped(rawTickers)
-    try use(plan(typed, state, policy, today, batchDate, batchTime))
-    finally typed.unpersist()
-  }
-
-  // Structural choice: persist the PARSED (typed) snapshot, not the raw
-  // strings. The snapshot feeds the policy pre-pass AND the main pass;
-  // caching the typed frame means the source (a derived, shuffled plan for
-  // the registry's synthetic tickers) is computed once per batch and every
-  // per-row string expression (tokenize, numeric casts, the DDMMYY date
-  // parse) runs exactly once, at cache materialization, inside whole-stage
-  // codegen. Caching the RAW side instead re-evaluates the parse in every
-  // consumer stage above the cache, where it can run interpreted (measured
-  // 100-900 CPU-seconds per q14 batch at sf0.1). No repartition here:
-  // sources own their scan parallelism (GraftSession sets 8m split bytes;
-  // TickerSource repartitions before its string build — a repartition of
-  // the built strings would just re-shuffle them). Cached blocks spill to
-  // disk. The CacheManager holds the entry until it is unpersisted — the
-  // ContextCleaner never drops a registered cache.
-  private def persistTyped(rawTickers: DataFrame): DataFrame =
-    parseColumns(rawTickers).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  private def plan(
-      typed: DataFrame,
-      state: DataFrame,
-      policy: Policy,
-      today: LocalDate,
-      batchDate: LocalDate,
-      batchTime: LocalTime
   ): DataFrame = {
-    val parsed = dropUnparseable(typed)
-
-    // Expiry-policy pre-pass (reference pass 1, main.py:128-141): the ONLY
-    // driver-side decision input is the distinct parsed expiry set, bounded
-    // by the listing calendar (dozens of dates at any data scale) — a
-    // single-column read of the cached typed frame. Like the reference's
-    // pass 1, rows missing other mandatory fields still contribute their
-    // expiry here.
-    val expiryDf = typed.select(col("expiry"))
+    val seen = Observation()
+    val typed = parseColumns(rawTickers)
+      .observe(seen, collect_set(unix_date(col("expiry"))).as("expiries"))
+      .localCheckpoint()
+    val expiries =
+      seen.get("expiries").asInstanceOf[collection.Seq[Int]].toSeq.map(LocalDate.ofEpochDay(_))
     val (targets, bandPct) = policy match {
-      case Hourly => (ExpiryPolicy.nearestExpiries(expiryDf, today), 7.0)
-      case Weekly => (ExpiryPolicy.fridayExpiries(expiryDf, today), 25.0)
+      case Hourly => (ExpiryPolicy.nearestFromDates(expiries, today), 7.0)
+      case Weekly => (ExpiryPolicy.fridayFromDates(expiries, today), 25.0)
     }
 
     // Per-row spot (reference main.py:168-172,204): each ticker is banded
     // against ITS OWN spot_price and emits that value as Future_Price. The
     // batch-global first-arrival spot (main.py:112-116, Parse.firstSpot) is
     // only ever logged by the reference — never used for filtering.
-    val banded = parsed
+    val banded = dropUnparseable(typed)
       .where(Snapshot.strikeBand(col("Strike"), col("spot"), bandPct))
       .where(Snapshot.expiryIn(col("expiry"), targets))
 

@@ -23,8 +23,8 @@ object Snapshot {
   }
 
   /** Expiry-membership filter (reference main.py:193). The target set is
-    * 2-3 dates, so a local `isin` — Catalyst turns it into an In predicate
-    * that can prune parquet row groups; no join needed.
+    * 2-3 dates, so a local `isin` — a per-row compare, no join needed.
+    * `expiry` is derived from the symbol, so no scan prunes on it.
     */
   def expiryIn(expiry: Column, targets: Seq[LocalDate]): Column =
     expiry.isin(targets.map(java.sql.Date.valueOf): _*)

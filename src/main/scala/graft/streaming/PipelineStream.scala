@@ -30,10 +30,11 @@ import graft.sinks.ParquetSink
   * runBatch takes `batchDate`/`batchTime` instead of reading the wall
   * clock, §7.4).
   *
-  * Scale: everything inside the batch is the runBatch plan (typed-parse
-  * cache, released when the append returns; broadcast delta join); the
-  * state read is a bounded top-N whose directory choice reads footers on
-  * the driver. The one cross-batch serialization point is the sink append
+  * Scale: everything inside the batch is the runBatch plan (one eager
+  * typed-snapshot checkpoint that also observes the expiry set, which the
+  * ContextCleaner frees after the append; broadcast delta join); the state
+  * read is a bounded top-N whose directory choice reads footers on the
+  * driver. The one cross-batch serialization point is the sink append
   * — inherent to the reference's chain-through-the-sink design, not to
   * this adapter.
   */
@@ -91,7 +92,7 @@ object PipelineStream {
           .select("SYMBOL", "Close", "OI", "state_seq")
       else ParquetSink.emptyState(spark)
     val (today, batchDate, batchTime) = clock()
-    OptionsPipeline.withBatch(batch, state, policy, today, batchDate, batchTime)(
-      ParquetSink.append(_, sinkPath, batchId))
+    ParquetSink.append(
+      OptionsPipeline.runBatch(batch, state, policy, today, batchDate, batchTime), sinkPath, batchId)
   }
 }

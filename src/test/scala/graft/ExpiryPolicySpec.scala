@@ -18,25 +18,27 @@ class ExpiryPolicySpec extends SparkSpec {
   private def df(dates: String*): DataFrame =
     dates.map(java.sql.Date.valueOf).toDF("expiry")
 
+  private def ds(dates: String*): Seq[LocalDate] = dates.map(LocalDate.parse)
+
   test("nearest: first 3 distinct future expiries ascending") {
-    val d = df("2025-10-17", "2025-10-16", "2025-10-18", "2025-10-16", "2025-10-20", "2025-10-01")
+    val d = ds("2025-10-17", "2025-10-16", "2025-10-18", "2025-10-16", "2025-10-20", "2025-10-01")
     assert(
-      ExpiryPolicy.nearestExpiries(d, today) ===
+      ExpiryPolicy.nearestFromDates(d, today) ===
         Seq("2025-10-16", "2025-10-17", "2025-10-18").map(LocalDate.parse))
   }
 
   test("nearest: today itself is active (>=)") {
-    val d = df("2025-10-15", "2025-10-16")
-    assert(ExpiryPolicy.nearestExpiries(d, today).head === LocalDate.parse("2025-10-15"))
+    val d = ds("2025-10-15", "2025-10-16")
+    assert(ExpiryPolicy.nearestFromDates(d, today).head === LocalDate.parse("2025-10-15"))
   }
 
   test("nearest: fewer than 3 futures returns what exists") {
-    assert(ExpiryPolicy.nearestExpiries(df("2025-10-16"), today).size === 1)
+    assert(ExpiryPolicy.nearestFromDates(ds("2025-10-16"), today).size === 1)
   }
 
   test("nearest: all-past falls back to the max past expiry (main.py:64-65)") {
-    val d = df("2025-10-01", "2025-09-01")
-    assert(ExpiryPolicy.nearestExpiries(d, today) === Seq(LocalDate.parse("2025-10-01")))
+    val d = ds("2025-10-01", "2025-09-01")
+    assert(ExpiryPolicy.nearestFromDates(d, today) === Seq(LocalDate.parse("2025-10-01")))
   }
 
   test("friday: W1 needs >=2 active expiries strictly before it") {

@@ -110,6 +110,70 @@ class OptionsPipelineSpec extends SparkSpec {
     assert(syms === Seq(s"C-ETH-100-$d17", s"C-ETH-125-$d17", s"C-ETH-75-$d17"))
   }
 
+  private def run(raw: org.apache.spark.sql.DataFrame, policy: OptionsPipeline.Policy) =
+    OptionsPipeline.runBatch(
+      raw,
+      ParquetSink.emptyState(spark),
+      policy,
+      today,
+      LocalDate.of(2025, 10, 15),
+      LocalTime.of(10, 0, 0))
+
+  test("pass-1 expiry set: an unparseable row's expiry still takes an E0/E1/E2 slot (main.py:128-141)") {
+    // expiries 16, 17, 18, 19 — the 16th only on a row with no spot_price,
+    // dropped in pass 2 but seen by pass 1: targets 16/17/18, so the 19th goes
+    val rows = Seq(
+      (s"C-ETH-100-$d16", "call_options", "100", "", "1.0", "10", 1L),
+      (s"C-ETH-100-$d17", "call_options", "100", "100.0", "1.0", "10", 2L),
+      (s"C-ETH-100-$d18", "call_options", "100", "100.0", "1.0", "10", 3L),
+      (s"C-ETH-100-$d19", "call_options", "100", "100.0", "1.0", "10", 4L) // 4th expiry → dropped
+    )
+    val syms = run(toDf(rows), OptionsPipeline.Hourly).collect().map(_.getString(0)).toSeq
+    assert(syms === Seq(s"C-ETH-100-$d17", s"C-ETH-100-$d18"))
+  }
+
+  test("pass-1 expiry set: an unparseable row's non-Friday expiry counts toward W1's two before (dw:70-81)") {
+    // actives Thu 16 (only on a row with no spot_price), Fri 17, Fri 24, Fri 31:
+    // Fri 24 has 16 and 17 before it → W1 = 24, W2 = 31. Without the 16th,
+    // W1 would be 31 and the 24th's row would go.
+    val rows = Seq(
+      (s"P-ETH-100-$d16", "put_options", "100", "", "1.0", "10", 1L),
+      (s"C-ETH-100-$d17", "call_options", "100", "100.0", "1.0", "10", 2L), // not W1/W2
+      ("C-ETH-100-241025", "call_options", "100", "100.0", "1.0", "10", 3L),
+      ("C-ETH-100-311025", "call_options", "100", "100.0", "1.0", "10", 4L)
+    )
+    val syms = run(toDf(rows), OptionsPipeline.Weekly).collect().map(_.getString(0)).toSeq
+    assert(syms === Seq("C-ETH-100-241025", "C-ETH-100-311025"))
+  }
+
+  test("runBatch registers no cache: its checkpoint is freed once the result is unreachable") {
+    val entries = () => org.apache.spark.sql.GraftTestCacheBridge.cachedEntries(spark)
+    val entries0 = entries()
+    val mark = SparkSpec.rddMark()
+    // three calls on distinct input, each result consumed and then dropped
+    (0 until 3).foreach { i =>
+      assert(run(toDf(batch(s"${8 + i}.5", s"${80 + i}")), OptionsPipeline.Hourly).count() === 4L)
+    }
+    assert(entries() === entries0, "runBatch registered a Dataset cache")
+    val left = SparkSpec.persistentSince(mark)
+    assert(left.isEmpty, s"RDDs made by runBatch still persistent after GC: $left")
+  }
+
+  test("empty snapshot: 0 partitions or 0 rows in 4 partitions gives 0 rows") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val schema = toDf(Seq.empty).schema
+    val sc = spark.sparkContext
+    val noParts = spark.createDataFrame(sc.emptyRDD[org.apache.spark.sql.Row], schema)
+    val noRows = spark.createDataFrame(sc.parallelize(Seq.empty[org.apache.spark.sql.Row], 4), schema)
+    for ((raw, policy) <- Seq(noParts -> OptionsPipeline.Hourly, noRows -> OptionsPipeline.Weekly)) {
+      // bounded, so a never-filled observation fails the test instead of hanging it
+      val n = Await.result(Future(run(raw, policy).count()), 2.minutes)
+      assert(n === 0L)
+    }
+  }
+
   test("per-row spot: band and Future_Price use each ticker's OWN spot_price (main.py:168-172,204)") {
     // Heterogeneous spots in one snapshot. Under the (wrong) batch-global
     // first-arrival spot (100), B would survive and C would be dropped;

@@ -34,16 +34,38 @@ class PlanGuardSpec extends SparkSpec {
     )
   }
 
+  /** Formatted plans of every query `body` executes, in order. */
+  private def executedPlans(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.explainString(FormattedMode))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
   test("q13 delta join is broadcast, and the batch reads its source once") {
     val p = plan("q13_options_pipeline")
     assert(p.contains("BroadcastHashJoin"), "delta join lost its broadcast")
-    // one parquet scan NODE feeding the synthetic snapshot build (the
-    // formatted detail section lists each physical node once): a second
-    // scan node would mean the stats/policy pre-pass re-reads the source
-    // (§8.4 lesson). The tree may REFERENCE the cached relation twice —
-    // that's reuse, not a re-read.
-    val scanNodes = "\\(\\d+\\) Scan parquet".r.findAllIn(p).size
-    assert(scanNodes === 1, s"expected 1 parquet scan node, saw $scanNodes")
+    // one parquet scan NODE over every query the batch executes — the
+    // snapshot checkpoint and the main pass (the formatted detail section
+    // lists each physical node once): a second scan node would mean the
+    // policy pre-pass or the main pass re-reads the source (§8.4 lesson).
+    val plans = executedPlans {
+      SparkEntry.queries("q13_options_pipeline")(spark, dir)
+        .write.format("noop").mode("overwrite").save()
+    }
+    val scanNodes = plans.map("\\(\\d+\\) Scan parquet".r.findAllIn(_).size).sum
+    assert(scanNodes === 1,
+      s"expected 1 parquet scan node, saw $scanNodes in:\n${plans.mkString("\n")}")
   }
 
   test("column pruning: x03 text stats scans only (doc_id, text)") {

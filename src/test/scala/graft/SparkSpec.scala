@@ -18,4 +18,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = GraftSession.local(cores = 4, appName = "graft-test")
+
+  /** A fresh RDD id. Ids are monotone, so an RDD made after this mark has a
+    * larger one, and RDDs of earlier suites never count against it.
+    */
+  def rddMark(): Int = session.sparkContext.emptyRDD[Unit].id
+
+  /** Ids of the RDDs made after `mark` that are still persistent once
+    * System.gc() has run and the ContextCleaner has had up to 30 s to free
+    * what became unreachable.
+    */
+  def persistentSince(mark: Int): Set[Int] = {
+    def live = session.sparkContext.getPersistentRDDs.keySet.filter(_ > mark).toSet
+    val deadline = System.currentTimeMillis + 30000L
+    System.gc()
+    while (live.nonEmpty && System.currentTimeMillis < deadline) {
+      Thread.sleep(100)
+      System.gc()
+    }
+    live
+  }
 }
