@@ -21,9 +21,10 @@ import org.apache.spark.storage.StorageLevel
   *   - Each iteration's result is `localCheckpoint`ed: truncating lineage
   *     is mandatory in iterative DataFrame jobs — without it the plan
   *     doubles per round and the optimizer re-plans the whole history.
-  *   - Edges are persisted once (MEMORY_AND_DISK, spills instead of
-  *     OOMing) and unpersisted on exit; label frames are checkpointed so
-  *     superseded iterations are dropped by the ContextCleaner.
+  *   - Edges are symmetrized once and `localCheckpoint`ed (blocks are
+  *     MEMORY_AND_DISK, spilling instead of OOMing); nothing is
+  *     unpersisted by hand. Edge and label checkpoints are freed by the
+  *     ContextCleaner once their frames are unreachable.
   */
 object Cluster {
 
@@ -66,12 +67,11 @@ object Cluster {
       .distinct()
       .localCheckpoint(true)
 
-    var labels = bidir
-      .select(col("src").as("id"))
-      .distinct()
-      .select(col("id"), col("id").as("comp"))
-      .localCheckpoint(true)
-
+    // labels: None until round 1. Every vertex starts labeled by itself,
+    // so round 1 needs no label frame: the edges are symmetric, every
+    // vertex is some edge's dst, and its round-1 label is
+    // least(id, min(src)) grouped by dst, with prev = id.
+    var labels: Option[DataFrame] = None
     var converged = false
     var iters = 0
     while (!converged && iters < maxIters) {
@@ -83,19 +83,26 @@ object Cluster {
       // checkpointed result instead of a second shuffle join per round.
       // The checkpoint is LAZY and the count materializes it — one job
       // per round (compute + persist + count together), not two.
-      val pushed = bidir
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("comp"), lit(false).as("own"))
-      val updated = labels
-        .select(col("id"), col("comp"), lit(true).as("own"))
-        .union(pushed)
-        .groupBy("id")
-        .agg(
-          min("comp").as("comp"),
-          max(when(col("own"), col("comp"))).as("prev"))
-        .localCheckpoint(false)
+      val updated = (labels match {
+        case None =>
+          bidir
+            .groupBy(col("dst").as("id"))
+            .agg(min(col("src")).as("m"))
+            .select(col("id"), least(col("id"), col("m")).as("comp"), col("id").as("prev"))
+        case Some(cur) =>
+          val pushed = bidir
+            .join(cur.withColumnRenamed("id", "src"), "src")
+            .select(col("dst").as("id"), col("comp"), lit(false).as("own"))
+          cur
+            .select(col("id"), col("comp"), lit(true).as("own"))
+            .union(pushed)
+            .groupBy("id")
+            .agg(
+              min("comp").as("comp"),
+              max(when(col("own"), col("comp"))).as("prev"))
+      }).localCheckpoint(false)
       val changed = updated.where(col("comp") =!= col("prev")).count()
-      labels = updated.select(col("id"), col("comp"))
+      labels = Some(updated.select(col("id"), col("comp")))
       converged = changed == 0
       iters += 1
     }
@@ -104,7 +111,7 @@ object Cluster {
         s"connectedComponents did not converge in $maxIters iterations " +
           "(graph diameter exceeds maxIters); raise maxIters — returning " +
           "partially-propagated labels would split real components")
-    labels
+    labels.get
   }
 
   /** Connected components by alternating large-star / small-star
@@ -290,7 +297,7 @@ object Cluster {
     * Scale shape: per round ONE edge join keyed by node + two hash aggs
     * with map-side partials ((node, label) plurality count, then the
     * min-struct argmax — never a window), per-round localCheckpoint,
-    * edges symmetrized once and persisted. Node universe = edge
+    * edges symmetrized once and checkpointed. Node universe = edge
     * endpoints, same as [[connectedComponents]].
     */
   def labelPropagation(

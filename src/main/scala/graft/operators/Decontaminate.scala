@@ -29,9 +29,8 @@ object Decontaminate {
   private def evalGramsOf(evalSet: DataFrame, n: Int, textCol: String): DataFrame =
     evalSet
       .select(TextAnalysis.shingles(TextAnalysis.tokens(col(textCol)), n).as("sh"))
-      // same explode-above-live-arrays trap as corpusGramsOf (17× measured);
-      // the persist also stops overlapBloom's TWO consumers (bloom build +
-      // exact-verify join) recomputing the eval shingling
+      // materialized: overlapBloom's TWO consumers (bloom build + exact-
+      // verify join) would otherwise each recompute the eval shingling
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .select(explode(col("sh")).as("gram"))
       .distinct()
@@ -39,13 +38,9 @@ object Decontaminate {
   private def corpusGramsOf(corpus: DataFrame, n: Int, idCol: String, textCol: String): DataFrame =
     Dedup
       .withShingles(corpus, n, idCol, textCol)
-      // materialize the shingle ARRAYS before the generator: explode above
-      // the live shingle expression pushes that expression out of the
-      // codegen'd projection into interpreted per-row evaluation (regex
-      // Pattern recompiled per call — measured 17× wall at 80k docs:
-      // 38 s → 2.2 s with the cache; same trap Dedup's self-joins hit,
-      // SURVEY §8.4). Cached blocks are dropped by the ContextCleaner when
-      // the returned plan is unreferenced.
+      // materialize the shingle ARRAYS once: both the size and the explode
+      // below read them. The CacheManager keeps the entry until it is
+      // unpersisted.
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // long, not int: aligns with BIGINT gram counts in SQL engines (the
       // DuckDB oracle) so hash-compares see identical dtypes

@@ -20,13 +20,16 @@ import graft.functions.GraftFunctions
   *   - Inverted-index n-gram Jaccard: postings lists are pruned by document
   *     frequency before the self-join, the standard guard against the
   *     quadratic blowup of stop-shingles.
-  *   - Self-join inputs are persisted (MEMORY_AND_DISK): the expensive
-  *     sketch subtree (shingling / MinHash / SimHash) feeds BOTH sides of
-  *     the candidate join plus the verification join, and without an
-  *     explicit persist Spark recomputes it per reference (observed 2-4×
-  *     sketch cost at sf0.1). Cached blocks are dropped by Spark's
-  *     ContextCleaner once the returned plan is unreferenced, and
-  *     MEMORY_AND_DISK spills instead of OOMing at scale.
+  *   - Self-join inputs are materialized once: the expensive sketch
+  *     subtree (shingling / MinHash / SimHash) feeds BOTH sides of the
+  *     candidate join plus the verification join, and without that Spark
+  *     recomputes it per reference (observed 2-4× sketch cost at sf0.1).
+  *     [[minhashLshPairs]] uses an eager `localCheckpoint`, whose blocks
+  *     the ContextCleaner frees once the returned frame is unreachable.
+  *     The other miners still `persist` (MEMORY_AND_DISK, spills instead
+  *     of OOMing at scale): the CacheManager keeps such an entry, and its
+  *     blocks, until `unpersist` — a frame persisted inside an operator
+  *     that returns a lazy result stays cached for the session.
   */
 object Dedup {
 
@@ -226,9 +229,9 @@ object Dedup {
       idCol: String,
       textCol: String
   ): (DataFrame, DataFrame) = {
-    // persist BEFORE the generator, not only before the self-join: explode
-    // above the live shingle expression evaluates it interpreted per row
-    // (measured 17× wall on the decontamination twin of this shape)
+    // persist BEFORE the generator: the exploded postings feed both the df
+    // count and the kept postings, so without it each reference would
+    // repeat the tokenize + shingle walk
     val postings = withShingles(docs, n, idCol, textCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
       .select(col(idCol), explode(col("sh")).as("shingle"))
@@ -359,26 +362,73 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): DataFrame = {
-    // One shuffle carries each text ONCE (see ngramJaccardPairs — same
-    // reshape, same any_value-is-exact-within-an-md5-class argument); the
-    // md5→rep fan-out mapping re-derives the digest map-side, so only ids
-    // and 32-char hashes ever shuffle again.
+    // ONE representative frame feeds every later step: the class groupBy
+    // carries each text once (see ngramJaccardPairs — same any_value-is-
+    // exact-within-an-md5-class argument), spread() restores parallelism
+    // for the shingle walk, and the eager localCheckpoint evaluates both
+    // once. Banding, the two verification joins, the member map and the
+    // within-class gate all read it; nothing is registered with the
+    // CacheManager, so the ContextCleaner frees the checkpoint's blocks
+    // once the returned frame is unreachable.
     val base = docs.select(col(idCol), col(textCol))
-    val reps = base
-      .groupBy(md5(col(textCol)).as("text_md5"))
-      .agg(
-        min(col(idCol)).as("rep_id"),
-        count(lit(1)).as("n_copies"),
-        any_value(col(textCol)).as(textCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val repDocs = reps.select(col("rep_id").as(idCol), col(textCol))
-    // (rep_id, member_id) including the representative itself
+    val reps = spread(
+      base
+        .groupBy(md5(col(textCol)).as("text_md5"))
+        .agg(
+          min(col(idCol)).as("rep_id"),
+          count(lit(1)).as("n_copies"),
+          any_value(col(textCol)).as(textCol)))
+      .select(
+        col("text_md5"),
+        col("rep_id"),
+        col("n_copies"),
+        TextAnalysis.shingles(TextAnalysis.tokens(col(textCol)), n).as("sh"))
+      .localCheckpoint()
+
+    // (doc, band_id, band_hash) in ONE expression evaluation per doc:
+    // MinHashBands computes the k-hash signature internally and emits the
+    // per-band fold, so no projection rewrite can duplicate the signature
+    // computation (see MinHashBands scaladoc for the failure mode).
+    val banded = reps
+      .where(size(col("sh")) > 0)
+      .select(
+        col("rep_id"),
+        posexplode(GraftFunctions.minhashBands(col("sh"), bands, rowsPerBand))
+          .as(Seq("band_id", "band_hash")))
+    val candidates = banded
+      .select(col("rep_id").as("a_id"), col("band_id"), col("band_hash"))
+      .join(banded.select(col("rep_id").as("b_id"), col("band_id"), col("band_hash")),
+        Seq("band_id", "band_hash"))
+      .where(col("a_id") < col("b_id"))
+      .select("a_id", "b_id")
+      .distinct()
+    val repPairs = candidates
+      .join(reps.select(col("rep_id").as("a_id"), col("sh").as("a_sh")), "a_id")
+      .join(reps.select(col("rep_id").as("b_id"), col("sh").as("b_sh")), "b_id")
+      .withColumn(
+        "jac",
+        round(
+          jaccard(
+            size(col("a_sh")),
+            size(col("b_sh")),
+            size(array_intersect(col("a_sh"), col("b_sh")))),
+          6))
+      .where(col("jac") >= threshold)
+      .select(col("a_id"), col("b_id"), col("jac"))
+
+    // (rep_id, member_id, dup) including the representative itself; the
+    // digest is re-derived map-side, so only ids and 32-char hashes shuffle.
+    // dup: a class with copies whose shingle set is non-empty — the banding
+    // path's size(sh) > 0 guard (a doc too short to shingle never pairs)
     val members = base
       .select(md5(col(textCol)).as("text_md5"), col(idCol).as("member_id"))
-      .join(reps.select(col("text_md5"), col("rep_id")), "text_md5")
-      .select(col("rep_id"), col("member_id"))
-
-    val repPairs = minhashLshPairsDistinct(repDocs, n, threshold, bands, rowsPerBand, idCol, textCol)
+      .join(
+        reps.select(
+          col("text_md5"),
+          col("rep_id"),
+          (col("n_copies") > 1 && size(col("sh")) > 0).as("dup")),
+        "text_md5")
+      .select(col("rep_id"), col("member_id"), col("dup"))
 
     // cross-class fan-out: every member pair across two verified classes
     val mA = members.select(col("rep_id").as("a_id"), col("member_id").as("a_m"))
@@ -389,78 +439,15 @@ object Dedup {
       .select(
         least(col("a_m"), col("b_m")).as("a_id"),
         greatest(col("a_m"), col("b_m")).as("b_id"),
-        col("jac")
-      )
-    // within-class pairs: exact duplicates, Jaccard 1 — but ONLY for
-    // classes whose shingle set is non-empty, matching the banding path's
-    // size(sh) > 0 guard (a doc too short to shingle never pairs)
-    val shingledReps = withShingles(repDocs, n, idCol, textCol)
-      .where(size(col("sh")) > 0)
-      .select(col(idCol).as("rep_id"))
-    val dupMembers = members
-      .join(reps.where(col("n_copies") > 1).select(col("rep_id")), "rep_id")
-      .join(shingledReps, "rep_id")
+        col("jac"))
+    // within-class pairs: exact duplicates, Jaccard 1
+    val dupMembers = members.where(col("dup"))
     val within = dupMembers
       .select(col("rep_id"), col("member_id").as("a_id"))
       .join(dupMembers.select(col("rep_id"), col("member_id").as("b_id")), "rep_id")
       .where(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"), lit(1.0).as("jac"))
     cross.unionByName(within)
-  }
-
-  /** The representative-level LSH core of [[minhashLshPairs]]: band, mine
-    * candidates, verify with exact Jaccard. Assumes `docs` has distinct
-    * texts (callers collapse duplicate classes first — see the pre-collapse
-    * note above).
-    */
-  private def minhashLshPairsDistinct(
-      docs: DataFrame,
-      n: Int,
-      threshold: Double,
-      bands: Int,
-      rowsPerBand: Int,
-      idCol: String,
-      textCol: String
-  ): DataFrame = {
-    val sh = withShingles(docs, n, idCol, textCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // (doc, band_id, band_hash) in ONE expression evaluation per doc:
-    // MinHashBands computes the k-hash signature internally and emits the
-    // per-band fold, so no projection rewrite can duplicate the signature
-    // computation (see MinHashBands scaladoc for the failure mode).
-    val banded = sh
-      .where(size(col("sh")) > 0)
-      .select(
-        col(idCol),
-        posexplode(GraftFunctions.minhashBands(col("sh"), bands, rowsPerBand))
-          .as(Seq("band_id", "band_hash"))
-      )
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val l = banded.select(col(idCol).as("a_id"), col("band_id"), col("band_hash"))
-    val r = banded.select(col(idCol).as("b_id"), col("band_id"), col("band_hash"))
-    val candidates = l
-      .join(r, Seq("band_id", "band_hash"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id")
-      .distinct()
-    val shA = sh.select(col(idCol).as("a_id"), col("sh").as("a_sh"))
-    val shB = sh.select(col(idCol).as("b_id"), col("sh").as("b_sh"))
-    candidates
-      .join(shA, "a_id")
-      .join(shB, "b_id")
-      .withColumn(
-        "jac",
-        round(
-          jaccard(
-            size(col("a_sh")),
-            size(col("b_sh")),
-            size(array_intersect(col("a_sh"), col("b_sh")))
-          ),
-          6
-        )
-      )
-      .where(col("jac") >= threshold)
-      .select(col("a_id"), col("b_id"), col("jac"))
   }
 
   /** SimHash near-dup pairs: 64-bit signature per doc (map-side expression),

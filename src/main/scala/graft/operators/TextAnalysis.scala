@@ -14,10 +14,20 @@ object TextAnalysis {
   /** Whitespace word tokens of a (trimmed) text column. */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
-  /** Distinct word n-gram shingles. Documents shorter than n shingle to an
-    * empty array (they can only exact-match).
+  /** Distinct word n-gram shingles, in first-occurrence order. Documents
+    * shorter than n shingle to an empty array (they can only exact-match).
+    * One compiled walk ([[graft.functions.WordShingles]]) computes the
+    * same array as [[shinglesHof]], whose per-window lambda runs
+    * interpreted on every row. `n` must be at least 1.
     */
   def shingles(toks: Column, n: Int): Column =
+    org.apache.spark.sql.GraftSqlBridge.column(
+      graft.functions.WordShingles(org.apache.spark.sql.GraftSqlBridge.expression(toks), n))
+
+  /** The Column-algebra formulation of [[shingles]] — the documented
+    * semantics, spec-pinned equal to the expression path.
+    */
+  private[graft] def shinglesHof(toks: Column, n: Int): Column =
     when(
       size(toks) >= n,
       array_distinct(
@@ -218,7 +228,8 @@ object TextAnalysis {
     * cannot inflate it — the x06 distinct-text discipline), and a gram
     * shared only by a doc with ITSELF is invisible, so the signal is
     * strictly cross-document. Shape: shingle arrays materialized once
-    * (the §8.4 trap), ONE shingle-keyed exchange for df, the join back
+    * (both the postings and the sizes read them), ONE shingle-keyed
+    * exchange for df, the join back
     * reusing that partitioning, one doc-keyed rollup. Docs with no
     * grams (< n tokens) report dup_ppm = −1 (the x70 sentinel).
     */
@@ -260,11 +271,9 @@ object TextAnalysis {
       textCol: String = "text"
   ): DataFrame = {
     // materialize the shingle arrays BEFORE the generator and the double
-    // reference below: explode above a live shingle expression pushes the
-    // tokenize/slice/concat work onto the interpreted per-row path, and the
-    // two branches (postings + per-doc sizes) would each recompute it
-    // (the §8.4 trap — measured 10.3 s → expected ~1 s at sf0.1). Cached
-    // blocks are dropped by the ContextCleaner when the plan is unreferenced.
+    // reference below: the two branches (postings + per-doc sizes) would
+    // each recompute the tokenize + shingle walk. The CacheManager keeps
+    // the entry until it is unpersisted.
     val sized = docs
       .select(
         col(idCol),

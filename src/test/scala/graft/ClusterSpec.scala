@@ -32,6 +32,34 @@ class ClusterSpec extends SparkSpec {
     assert(e.getMessage.contains("did not converge"))
   }
 
+  test("maxIters = 1: round 1 alone converges only an edgeless graph") {
+    // round 1 folds the initial self-labels into the first edge pass, so it
+    // still counts as one iteration: any edge relabels its larger end there
+    val edge = Seq((5L, 3L)).toDF("a_id", "b_id")
+    val e = intercept[IllegalStateException] {
+      Cluster.connectedComponents(edge, maxIters = 1).collect()
+    }
+    assert(e.getMessage.contains("did not converge in 1 iterations"))
+    assert(Cluster.connectedComponents(edge, maxIters = 2).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap === Map(3L -> 3L, 5L -> 3L))
+    val none = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
+    assert(Cluster.connectedComponents(none, maxIters = 1).count() === 0L)
+    intercept[IllegalStateException](Cluster.connectedComponents(none, maxIters = 0))
+  }
+
+  test("job budget: connectedComponents labels and writes 120 near-dup cliques in ≤ 11 Spark jobs") {
+    // the near-dup shape: cliques of 2 to 5 docs, so every label settles in
+    // round 1 and round 2 sees no change
+    val pairs = (0L until 120L).flatMap { c =>
+      val v = (0L until 2L + c % 4).map(c * 10 + _)
+      for (a <- v.indices; b <- a + 1 until v.size) yield (v(b), v(a))
+    }.toDF("a_id", "b_id")
+    val jobs = SparkSpec.jobsOf(
+      Cluster.connectedComponents(pairs).write.format("noop").mode("overwrite").save())
+    assert(jobs > 0 && jobs <= 11, s"connectedComponents ran $jobs Spark jobs")
+    assert(Cluster.connectedComponents(pairs).where($"comp" =!= $"id" - $"id" % 10).count() === 0L)
+  }
+
   test("near-dup clusters: exact + near dups share a component, canonical is min id") {
     val docs = Seq(
       (0L, "the quick brown fox jumps over the lazy dog"),

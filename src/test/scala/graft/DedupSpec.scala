@@ -104,6 +104,41 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 900L || p._2 == 900L))
   }
 
+  /** 360 docs of 30 words: 300 distinct texts, every 10th copied twice and
+    * every 5th followed by a one-word edit, shuffled by `seed`.
+    */
+  private def lshCorpus(seed: Int) = {
+    val rnd = new scala.util.Random(seed)
+    val texts = (0 until 300).map(_ => Vector.fill(30)(s"w${rnd.nextInt(400)}"))
+    val variants = texts.zipWithIndex.flatMap { case (t, i) =>
+      val copies = if (i % 10 == 0) Seq(t, t) else Nil
+      val near = if (i % 5 == 0) Seq(t.updated(15, "edit")) else Nil
+      t +: (copies ++ near)
+    }
+    rnd.shuffle(variants).zipWithIndex.map { case (t, id) => (id.toLong, t.mkString(" ")) }
+      .toDF("doc_id", "text")
+  }
+
+  test("minhashLshPairs leaves no persistent RDD or cache entry behind") {
+    val entries = () => org.apache.spark.sql.GraftTestCacheBridge.cachedEntries(spark)
+    val entries0 = entries()
+    val mark = SparkSpec.rddMark()
+    // three calls on distinct input, each result consumed and then dropped
+    (0 until 3).foreach { i =>
+      assert(Dedup.minhashLshPairs(lshCorpus(i), 3, 0.5, bands = 32, rowsPerBand = 4).count() > 0L)
+    }
+    assert(entries() === entries0, "minhashLshPairs registered a Dataset cache")
+    val left = SparkSpec.persistentSince(mark)
+    assert(left.isEmpty, s"RDDs made by minhashLshPairs still persistent after GC: $left")
+  }
+
+  test("job budget: minhashLshPairs mines and writes a 360-doc corpus in ≤ 13 Spark jobs") {
+    val jobs = SparkSpec.jobsOf(
+      Dedup.minhashLshPairs(lshCorpus(7), 3, 0.5, bands = 32, rowsPerBand = 4)
+        .write.format("noop").mode("overwrite").save())
+    assert(jobs > 0 && jobs <= 13, s"minhashLshPairs ran $jobs Spark jobs")
+  }
+
   test("lsh pre-collapse: too-short duplicate docs still never pair (size(sh)>0 guard)") {
     val df = Seq((0L, "tiny"), (1L, "tiny"), (2L, "tiny")).toDF("doc_id", "text")
     assert(Dedup.minhashLshPairs(df, 3, 0.4, bands = 32, rowsPerBand = 4).count() === 0L)

@@ -2,7 +2,6 @@ package graft
 
 import java.time.{LocalDate, LocalTime}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.OptionsPipeline
@@ -83,30 +82,6 @@ class ScheduledRunnerSpec extends SparkSpec {
         s"${1 + i + markBump}.0", s"${10 * i + markBump}", seqBase + i)
     }
 
-  /** Spark jobs `body` submits (the streaming and broadcast threads it
-    * starts inherit the tag), counted once the listener bus has drained.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobs"
-    val tag = java.util.UUID.randomUUID.toString
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == tag)) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(key, tag)
-    try {
-      body
-      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
-
   test("job budget: a warm tick runs ≤ 5 Spark jobs, the state-tail read none") {
     val ((snapDir, sink, _), tick) = cron("graft_sched_jobs", OptionsPipeline.Hourly)
     (0 until 3).foreach { i =>
@@ -115,12 +90,12 @@ class ScheduledRunnerSpec extends SparkSpec {
     }
     assert(new java.io.File(sink).list().count(_.startsWith("batch_id=")) >= 2)
 
-    assert(jobsOf(ParquetSink.readStateTail(spark, sink, 300)) === 0)
+    assert(SparkSpec.jobsOf(ParquetSink.readStateTail(spark, sink, 300)) === 0)
     // the batch's one job: the snapshot checkpoint that observes the expiries
-    assert(jobsOf(OptionsPipeline.runBatch(chain(9, 900L).toDF(), ParquetSink.emptyState(spark),
+    assert(SparkSpec.jobsOf(OptionsPipeline.runBatch(chain(9, 900L).toDF(), ParquetSink.emptyState(spark),
       OptionsPipeline.Hourly, today, today, LocalTime.of(12, 30, 0))) === 1)
     chain(3, 300L).toDF().write.mode("append").parquet(snapDir)
-    val jobs = jobsOf(tick(LocalTime.of(13, 0, 0)))
+    val jobs = SparkSpec.jobsOf(tick(LocalTime.of(13, 0, 0)))
     assert(jobs > 0 && jobs <= 5, s"a warm tick ran $jobs Spark jobs")
     assert(spark.read.parquet(sink).where("Time = '13:00:00'").count() === 40L)
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,6 +24,30 @@ object SparkSpec {
     * larger one, and RDDs of earlier suites never count against it.
     */
   def rddMark(): Int = session.sparkContext.emptyRDD[Unit].id
+
+  /** Spark jobs `body` submits (the streaming and broadcast threads it
+    * starts inherit the tag), counted once the listener bus has drained.
+    */
+  def jobsOf(body: => Unit): Int = {
+    val sc = session.sparkContext
+    val key = "graft.spec.jobs"
+    val tag = java.util.UUID.randomUUID.toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try {
+      body
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
 
   /** Ids of the RDDs made after `mark` that are still persistent once
     * System.gc() has run and the ContextCleaner has had up to 30 s to free

@@ -17,6 +17,65 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out(2) === Set("x y z", "y z x", "z x y")) // distinct collapses repeat
   }
 
+  test("shingles expression ≡ the HOF algebra: n = 1..5, codegen and interpreted, ANSI on and off") {
+    // WordShingles must reproduce shinglesHof element for element, in order:
+    // trim strips only spaces, so tabs, CR/LF and a trailing space leave
+    // empty tokens; concat_ws skips NULL elements; array_distinct keeps the
+    // first occurrence; a NULL array and a too-short one shingle to []
+    // 500 seeded texts over a 12-word vocabulary (so grams repeat) joined
+    // by mixed whitespace runs, plus the hand-picked edge cases
+    val rnd = new scala.util.Random(11)
+    val seps = Vector(" ", " ", " ", "  ", "\t", "\r\n", " \t ")
+    val generated = Seq.fill(500) {
+      Seq.fill(rnd.nextInt(40))(s"w${rnd.nextInt(12)}" + seps(rnd.nextInt(seps.size))).mkString
+    }
+    val texts = (generated ++ Seq(
+      "\tfoo bar\tbaz\t", "a b\r\nc d\r\n", "  lead and trail  ", "x \t y", "\t",
+      "", null.asInstanceOf[String],
+      "a b a b a b c a b", "z z z z z z", "one"
+    )).toDF("text")
+      .select(TextAnalysis.tokens($"text").as("toks"))
+    val arrays = Seq(
+      Seq("a", null, "b", "c"), Seq(null, null, "a", null), Seq[String](null, null),
+      Seq("a", null, "a", null, "a"), Seq.empty[String], null
+    ).toDF("toks")
+    // repartition: no ConvertToLocalRelation, so the session's eval mode is what runs
+    val input = texts.unionByName(arrays).repartition(3).cache()
+    val ns = 1 to 5
+    val cols = ns.flatMap(n => Seq(
+      TextAnalysis.shingles($"toks", n).as(s"fast$n"), TextAnalysis.shinglesHof($"toks", n).as(s"hof$n")))
+    val conf = spark.conf
+    val keys = Seq("spark.sql.ansi.enabled", "spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> conf.getOption(k))
+    try {
+      for (ansi <- Seq("true", "false"); (wholeStage, factory) <- Seq("true" -> "CODEGEN_ONLY", "false" -> "NO_CODEGEN")) {
+        conf.set(keys(0), ansi); conf.set(keys(1), wholeStage); conf.set(keys(2), factory)
+        val out = input.select(cols: _*)
+        ns.foreach(n => assert(out.schema(s"fast$n").dataType === out.schema(s"hof$n").dataType))
+        assert(out.schema("fast3").dataType ===
+          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType, containsNull = true))
+        val rows = out.collect()
+        for (r <- rows; n <- ns) {
+          val (fast, hof) = (r.getSeq[String](2 * (n - 1)), r.getSeq[String](2 * n - 1))
+          assert(fast === hof, s"n=$n ansi=$ansi wholeStage=$wholeStage")
+        }
+      }
+    } finally {
+      saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+      input.unpersist()
+    }
+    val edges = Seq(("a b a b a b c a b", 2), ("\tfoo bar\t", 2), ("z z z z", 1))
+      .map { case (t, n) =>
+        Seq(t).toDF("text").select(TextAnalysis.shingles(TextAnalysis.tokens($"text"), n))
+          .head().getSeq[String](0)
+      }
+    assert(edges === Seq(Seq("a b", "b a", "b c", "c a"), Seq(" foo", "foo bar", "bar "), Seq("z")))
+    val nulls = Seq(Seq("a", null, "b")).toDF("toks")
+      .select(TextAnalysis.shingles($"toks", 2)).head().getSeq[String](0)
+    assert(nulls === Seq("a", "b"))
+    intercept[IllegalArgumentException](TextAnalysis.shingles($"toks", 0))
+  }
+
   test("tfidf top-k: hand-computed scores, rounded-score ranking, term tie-break") {
     // N=3; every term has df=2 → idf = ln(4/3)+1; round(·,6) = 1.287682
     val docs = Seq((1L, "a a b"), (2L, "a c"), (3L, "b b b c")).toDF("doc_id", "text")
