@@ -42,10 +42,20 @@ object GraftSession {
       // pair-mining + iterative-CC mega-plan (x44/x14/x71) emits enough
       // codegen units to evict ITSELF, so every execution re-Janinos and
       // HotSpot re-JITs ~86 classes (~3.4 s/rep measured).
-      // 4096 entries makes repeated plans cache-hit (misses drop to ~5,
-      // x44 wall 4.8 → 3.9 s); the cost is bounded driver-side class
+      // 4096 entries lets a repeated plan hit (misses drop to ~5, x44
+      // wall 4.8 → 3.9 s); the cost is bounded driver-side class
       // retention, negligible against a 122-query engine's footprint.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // The cache key includes the class loader, and with artifact
+      // isolation on (the default) every cloned session — each streaming
+      // query runs on one — gets its own executor class loader. Every
+      // cron tick then missed the cache and compiled its ~31 units again,
+      // and the JIT compiled the new classes again too. graft adds no
+      // session artifacts (`SparkSession.addArtifact`, Spark Connect
+      // uploads), so all sessions can share one loader. Revisit this if
+      // session artifacts are ever added: without isolation they would be
+      // visible to every session of the application.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.ui.enabled", "false")

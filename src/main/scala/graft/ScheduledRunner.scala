@@ -42,6 +42,13 @@ import graft.streaming.PipelineStream
   * reference's `main.py` stamp discipline) from the real clock here —
   * tests keep injecting fixed clocks through [[PipelineStream.start]]
   * directly.
+  *
+  * Scale: a warm tick costs its 5 Spark jobs and no code generation. A
+  * tick starts a new streaming query on a cloned session, and with
+  * artifact isolation off ([[GraftSession]]) the clone keeps the one
+  * executor class loader that keys the codegen cache, so the plan the
+  * last tick compiled is a cache hit, the next day's included
+  * (`ScheduledRunnerSpec` pins both).
   */
 object ScheduledRunner {
 

@@ -351,7 +351,8 @@ object Dedup {
     * verified Jaccard because Jaccard is a function of the texts alone.
     * Candidate volume becomes quadratic in DISTINCT texts per bucket, never
     * in copies; the (inherent) quadratic output of a duplicate class is
-    * emitted as a constant-time fan-out join, not mined from band buckets.
+    * emitted by exploding the member list the representative carries from
+    * the collapse, not mined from band buckets.
     */
   def minhashLshPairs(
       docs: DataFrame,
@@ -364,37 +365,35 @@ object Dedup {
   ): DataFrame = {
     // ONE representative frame feeds every later step: the class groupBy
     // carries each text once (see ngramJaccardPairs — same any_value-is-
-    // exact-within-an-md5-class argument), spread() restores parallelism
-    // for the shingle walk, and the eager localCheckpoint evaluates both
-    // once. Banding, the two verification joins, the member map and the
-    // within-class gate all read it; nothing is registered with the
-    // CacheManager, so the ContextCleaner frees the checkpoint's blocks
-    // once the returned frame is unreachable.
-    val base = docs.select(col(idCol), col(textCol))
+    // exact-within-an-md5-class argument) with its member ids, spread()
+    // restores parallelism for the shingle walk, and the eager
+    // localCheckpoint evaluates the shingles and the band signature once.
+    // Both sides of the band join, the two verification joins and both
+    // fan-outs read it, so no step goes back to the documents; nothing is
+    // registered with the CacheManager, so the ContextCleaner frees the
+    // checkpoint's blocks once the returned frame is unreachable.
     val reps = spread(
-      base
-        .groupBy(md5(col(textCol)).as("text_md5"))
+      docs
+        .groupBy(md5(col(textCol)))
         .agg(
           min(col(idCol)).as("rep_id"),
-          count(lit(1)).as("n_copies"),
+          collect_list(col(idCol)).as("members"),
           any_value(col(textCol)).as(textCol)))
       .select(
-        col("text_md5"),
         col("rep_id"),
-        col("n_copies"),
+        col("members"),
         TextAnalysis.shingles(TextAnalysis.tokens(col(textCol)), n).as("sh"))
+      // (band_id, band_hash) source in ONE expression evaluation per doc:
+      // MinHashBands computes the k-hash signature internally and emits the
+      // per-band fold, so no projection rewrite can duplicate the signature
+      // computation (see MinHashBands scaladoc for the failure mode). NULL
+      // for a doc too short to shingle, which then never bands.
+      .withColumn("sig_bands",
+        when(size(col("sh")) > 0, GraftFunctions.minhashBands(col("sh"), bands, rowsPerBand)))
       .localCheckpoint()
 
-    // (doc, band_id, band_hash) in ONE expression evaluation per doc:
-    // MinHashBands computes the k-hash signature internally and emits the
-    // per-band fold, so no projection rewrite can duplicate the signature
-    // computation (see MinHashBands scaladoc for the failure mode).
-    val banded = reps
-      .where(size(col("sh")) > 0)
-      .select(
-        col("rep_id"),
-        posexplode(GraftFunctions.minhashBands(col("sh"), bands, rowsPerBand))
-          .as(Seq("band_id", "band_hash")))
+    val banded = reps.select(
+      col("rep_id"), posexplode(col("sig_bands")).as(Seq("band_id", "band_hash")))
     val candidates = banded
       .select(col("rep_id").as("a_id"), col("band_id"), col("band_hash"))
       .join(banded.select(col("rep_id").as("b_id"), col("band_id"), col("band_hash")),
@@ -402,9 +401,12 @@ object Dedup {
       .where(col("a_id") < col("b_id"))
       .select("a_id", "b_id")
       .distinct()
+    // verification fetches each side's members along with its shingles
+    def side(p: String) =
+      reps.select(col("rep_id").as(s"${p}_id"), col("sh").as(s"${p}_sh"), col("members").as(s"${p}_members"))
     val repPairs = candidates
-      .join(reps.select(col("rep_id").as("a_id"), col("sh").as("a_sh")), "a_id")
-      .join(reps.select(col("rep_id").as("b_id"), col("sh").as("b_sh")), "b_id")
+      .join(side("a"), "a_id")
+      .join(side("b"), "b_id")
       .withColumn(
         "jac",
         round(
@@ -414,37 +416,22 @@ object Dedup {
             size(array_intersect(col("a_sh"), col("b_sh")))),
           6))
       .where(col("jac") >= threshold)
-      .select(col("a_id"), col("b_id"), col("jac"))
-
-    // (rep_id, member_id, dup) including the representative itself; the
-    // digest is re-derived map-side, so only ids and 32-char hashes shuffle.
-    // dup: a class with copies whose shingle set is non-empty — the banding
-    // path's size(sh) > 0 guard (a doc too short to shingle never pairs)
-    val members = base
-      .select(md5(col(textCol)).as("text_md5"), col(idCol).as("member_id"))
-      .join(
-        reps.select(
-          col("text_md5"),
-          col("rep_id"),
-          (col("n_copies") > 1 && size(col("sh")) > 0).as("dup")),
-        "text_md5")
-      .select(col("rep_id"), col("member_id"), col("dup"))
 
     // cross-class fan-out: every member pair across two verified classes
-    val mA = members.select(col("rep_id").as("a_id"), col("member_id").as("a_m"))
-    val mB = members.select(col("rep_id").as("b_id"), col("member_id").as("b_m"))
     val cross = repPairs
-      .join(mA, "a_id")
-      .join(mB, "b_id")
+      .select(explode(col("a_members")).as("a_m"), col("b_members"), col("jac"))
+      .select(col("a_m"), explode(col("b_members")).as("b_m"), col("jac"))
       .select(
         least(col("a_m"), col("b_m")).as("a_id"),
         greatest(col("a_m"), col("b_m")).as("b_id"),
         col("jac"))
-    // within-class pairs: exact duplicates, Jaccard 1
-    val dupMembers = members.where(col("dup"))
-    val within = dupMembers
-      .select(col("rep_id"), col("member_id").as("a_id"))
-      .join(dupMembers.select(col("rep_id"), col("member_id").as("b_id")), "rep_id")
+    // within-class pairs: exact duplicates, Jaccard 1, from a class with
+    // copies whose shingle set is non-empty — the banding path's guard (a
+    // doc too short to shingle never pairs)
+    val within = reps
+      .where(size(col("members")) > 1 && size(col("sh")) > 0)
+      .select(explode(col("members")).as("a_id"), col("members"))
+      .select(col("a_id"), explode(col("members")).as("b_id"))
       .where(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"), lit(1.0).as("jac"))
     cross.unionByName(within)

@@ -87,6 +87,12 @@ object OptionsPipeline {
     * returned frame is unreachable. Then a broadcast delta join and one
     * range-partitioned sort.
     *
+    * The per-batch values stay out of the generated code: the Date/Time
+    * stamps are string literals, which Spark passes by reference, and the
+    * expiry targets go through [[Snapshot.expiryIn]]. So the next batch's
+    * plan, the next day's included, reuses the compiled classes; only a
+    * change in the number of targets compiles the filter's stage again.
+    *
     * @param rawTickers raw snapshot (Schemas.ticker shape, with src_seq)
     * @param state      previous sink rows (tail-N read-back; may be empty)
     * @param today      "today" for expiry policy (reference uses IST now)

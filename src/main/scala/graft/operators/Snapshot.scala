@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.BatchConstant
+
 /** Snapshot-shaping operators: strike band, expiry membership, keep-last
   * dedup, canonical sort (SURVEY.md §2.2-2.3).
   */
@@ -25,9 +27,14 @@ object Snapshot {
   /** Expiry-membership filter (reference main.py:193). The target set is
     * 2-3 dates, so a local `isin` — a per-row compare, no join needed.
     * `expiry` is derived from the symbol, so no scan prunes on it.
+    *
+    * The targets are compared as epoch days held in [[BatchConstant]]s,
+    * not as date literals: a date literal is inlined into the generated
+    * code, so each new day's targets would compile the filter's stage
+    * again. Only a change in the NUMBER of targets gives new code.
     */
   def expiryIn(expiry: Column, targets: Seq[LocalDate]): Column =
-    expiry.isin(targets.map(java.sql.Date.valueOf): _*)
+    unix_date(expiry).isin(targets.map(d => BatchConstant.column(d.toEpochDay)): _*)
 
   /** Keep-LAST-by-key dedup (reference drop_duplicates(keep='last'),
     * main.py:233). pandas' keep-last depends on input order; Spark makes it

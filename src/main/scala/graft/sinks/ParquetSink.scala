@@ -9,6 +9,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.functions.BatchConstant
+
 /** Parquet sink + bounded state read-back (SURVEY.md §2.1).
   *
   * Replaces the reference's Google-Sheets append (main.py:332-351) and
@@ -45,6 +47,12 @@ object ParquetSink {
     * exchange here. One task sorts, numbers and writes one file per batch:
     * a batch is one filtered chain snapshot (hundreds to a few thousand
     * rows), and the one file keeps the tail read to one footer per batch.
+    *
+    * The batch id and the `sink_seq` offset are [[BatchConstant]]s, not
+    * literals, so the next batch reuses this plan's compiled code. Being
+    * non-foldable, the partition value is sorted on by the writer: a sort
+    * inside the same task on a key all rows share, which keeps their
+    * order and adds no job or exchange.
     */
   def append(df: DataFrame, path: String, batchId: Long): Unit = {
     val canonical = Seq(col("Expiry_Date").asc, col("Time").asc, col("SYMBOL").asc)
@@ -52,8 +60,8 @@ object ParquetSink {
       .sortWithinPartitions(canonical: _*)
       .select(
         col("*"),
-        (monotonically_increasing_id() + lit(batchId * (1L << 32) + 1L)).as("sink_seq"),
-        lit(batchId).as("batch_id"))
+        (monotonically_increasing_id() + BatchConstant.column(batchId * (1L << 32) + 1L)).as("sink_seq"),
+        BatchConstant.column(batchId).as("batch_id"))
       .write
       .mode("append")
       .partitionBy("batch_id")

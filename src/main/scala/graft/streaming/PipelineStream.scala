@@ -36,7 +36,11 @@ import graft.sinks.ParquetSink
   * read is a bounded top-N whose directory choice reads footers on the
   * driver. The one cross-batch serialization point is the sink append
   * — inherent to the reference's chain-through-the-sink design, not to
-  * this adapter.
+  * this adapter. Every micro-batch plans the same query over new data,
+  * and it compiles no code after the first batches: the batch's stamps
+  * and targets and the append's batch id reach the generated code by
+  * reference, and each query's cloned session shares the one executor
+  * class loader that keys the codegen cache ([[graft.GraftSession]]).
   */
 object PipelineStream {
 

@@ -139,6 +139,22 @@ class DedupSpec extends SparkSpec {
     assert(jobs > 0 && jobs <= 13, s"minhashLshPairs ran $jobs Spark jobs")
   }
 
+  test("minhashLshPairs computes each band signature once: one minhashbands in its plans") {
+    val executions = SparkSpec.queryExecutions {
+      Dedup.minhashLshPairs(lshCorpus(5).where(col("doc_id") < 200), 3, 0.5, bands = 32, rowsPerBand = 4)
+        .write.format("noop").mode("overwrite").save()
+    }
+    // every executed plan of the call — the representative checkpoint and
+    // the pair query — through AQE stages and broadcast builds
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val evals = executions.flatMap { qe =>
+      helper.collectWithSubqueries(qe.executedPlan) { case p =>
+        p.expressions.flatMap(_.collect { case m: graft.functions.MinHashBands => m })
+      }.flatten
+    }
+    assert(evals.length === 1, s"minhashbands evaluated in ${evals.length} plan places")
+  }
+
   test("lsh pre-collapse: too-short duplicate docs still never pair (size(sh)>0 guard)") {
     val df = Seq((0L, "tiny"), (1L, "tiny"), (2L, "tiny")).toDF("doc_id", "text")
     assert(Dedup.minhashLshPairs(df, 3, 0.4, bands = 32, rowsPerBand = 4).count() === 0L)

@@ -35,22 +35,9 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   /** Formatted plans of every query `body` executes, in order. */
-  private def executedPlans(body: => Unit): Seq[String] = {
-    import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen.add(qe.explainString(FormattedMode))
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    seen.toArray(Array.empty[String]).toSeq
-  }
+  private def executedPlans(body: => Unit): Seq[String] =
+    SparkSpec.queryExecutions(body)
+      .map(_.explainString(org.apache.spark.sql.execution.FormattedMode))
 
   test("q13 delta join is broadcast, and the batch reads its source once") {
     val p = plan("q13_options_pipeline")

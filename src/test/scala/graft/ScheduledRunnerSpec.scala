@@ -115,6 +115,78 @@ class ScheduledRunnerSpec extends SparkSpec {
     assert(left.isEmpty, s"RDDs made by the ticks still persistent after GC: $left")
   }
 
+  /** Janino compiles in this JVM so far: every codegen-cache miss is one. */
+  private def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** A cron over 40-contract chains on four expiries, 15-18 Oct, whose
+    * tick at (day, hour) returns the units it compiled.
+    */
+  private def codegenCron(name: String) = {
+    val ((snapDir, sink, ckpt), _) = cron(name, OptionsPipeline.Hourly)
+    val tick = (day: LocalDate, hour: Int) => {
+      chain(hour, 100L * hour).map { t =>
+        val exp = s"${15 + t.src_seq.toInt % 4}1025"
+        t.copy(symbol = t.symbol.replace(d17, exp))
+      }.toDF().write.mode("append").parquet(snapDir)
+      val before = compiles()
+      ScheduledRunner.runTick(spark, OptionsPipeline.Hourly, snapDir, sink, ckpt,
+        Trigger.AvailableNow(), () => (day, day, LocalTime.of(hour, 0, 0)))
+      compiles() - before
+    }
+    (sink, tick)
+  }
+
+  test("a warm tick compiles no code") {
+    val (sink, tick) = codegenCron("graft_sched_codegen")
+    tick(today, 10)
+    tick(today, 11)
+
+    // the append's per-batch values are what the inlined literals gave:
+    // batch_id = N and sink_seq = N·2³² + 1.. in canonical order
+    val rows = spark.read.parquet(sink).orderBy("sink_seq").collect()
+      .map(r => (r.getAs[Int]("batch_id"), r.getAs[Long]("sink_seq"),
+        r.getAs[String]("Expiry_Date"), r.getAs[String]("SYMBOL")))
+      .toSeq
+    assert(rows.map(_._1).distinct === Seq(0, 1))
+    rows.groupBy(_._1).foreach { case (b, rs) =>
+      assert(rs.length === 30) // the 18 Oct expiry is not a target on the 15th
+      assert(rs.map(_._2) === (1 to rs.length).map(p => (b.toLong << 32) + p))
+      assert(rs.map(r => (r._3, r._4)) === rs.map(r => (r._3, r._4)).sorted)
+    }
+    // and the Spark row schema in the footer keeps its nullability
+    val file = new java.io.File(s"$sink/batch_id=1").listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(file.length === 1)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.head.toURI), spark.sparkContext.hadoopConfiguration))
+    val footer =
+      try reader.getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")
+      finally reader.close()
+    import org.apache.spark.sql.types._
+    val expected = StructType(Seq(
+      ("SYMBOL", StringType, true), ("Date", StringType, false), ("Time", StringType, false),
+      ("Future_Price", DoubleType, true), ("Expiry_Date", StringType, true),
+      ("Strike", DoubleType, true), ("Option_Type", StringType, false),
+      ("Close", DoubleType, true), ("OI", LongType, true), ("Open", DoubleType, true),
+      ("OI_Change", LongType, true), ("sink_seq", LongType, false)
+    ).map { case (n, t, nullable) => StructField(n, t, nullable) })
+    assert(DataType.fromJson(footer) === expected)
+
+    // the same plan on the next snapshot reuses every generated class
+    val warm = tick(today, 12)
+    assert(warm === 0L, s"a warm same-day tick compiled $warm codegen units")
+  }
+
+  test("a day-rollover tick compiles no code: the new expiry targets are not inlined") {
+    val (_, tick) = codegenCron("graft_sched_rollover")
+    (10 to 12).foreach(tick(today, _))
+    // targets move from 15-17 Oct to 16-18 Oct; their count stays 3
+    val rollover = tick(today.plusDays(1), 0)
+    info(s"day-rollover tick compiled $rollover codegen units")
+    assert(rollover === 0L)
+  }
+
   test("two weekly ticks: ±25% band, W1/W2 Fridays, sink-chained deltas") {
     val ((snapDir, sink, _), tick) = cron("graft_sched_weekly", OptionsPipeline.Weekly)
     // today Wed 15 Oct 2025; active expiries Thu 16, Fri 17, Fri 24, Fri 31 →

@@ -49,6 +49,26 @@ object SparkSpec {
     n.get
   }
 
+  /** The query executions `body` runs, in order, once the listener bus
+    * has drained.
+    */
+  def queryExecutions(body: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    session.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.GraftTestBridge.drainListenerBus(session.sparkContext)
+    } finally session.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[QueryExecution]).toSeq
+  }
+
   /** Ids of the RDDs made after `mark` that are still persistent once
     * System.gc() has run and the ContextCleaner has had up to 30 s to free
     * what became unreachable.
