@@ -499,10 +499,10 @@ private[graft] trait MediaGraphRegistry extends CurationIndexRegistry {
     * list_intersect over the same corpus.
     */
   protected def x76(s: SparkSession, dir: String): DataFrame = {
-    // plain scan for the miner input — containmentPairs spreads
-    // internally (withShingles), so a dts() here would shuffle the full
-    // text corpus twice back-to-back; only the excerpt DERIVATION (which
-    // tokenizes on the scan side) takes the spread frame
+    // plain scan for the miner input — containmentPairs spreads its
+    // representative classes internally, so a dts() here would shuffle
+    // the full text corpus twice back-to-back; only the excerpt
+    // DERIVATION (which tokenizes on the scan side) takes the spread frame
     val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
     val excerpts = dts(s, dir)
       .select(col("doc_id"), col("text"))

@@ -306,8 +306,6 @@ object GraftFunctions {
     */
   def intGram(vec: Column): Column = call_function("int_gram", vec)
 
-  def dotProduct(a: Column, b: Column): Column = call_function("dot_product", a, b)
-
   /** Elementwise (mins, maxs) ranges of a vector column — ONE
     * struct(mins array<double>, maxs array<double>) row per group.
     */
@@ -338,10 +336,6 @@ object GraftFunctions {
     */
   def countMinTokens(tokens: Column, depth: Int, width: Int): Column =
     call_function("count_min_tokens", tokens, lit(depth), lit(width))
-
-  /** MinHash signature (array<long> of length k) of an array<string> column. */
-  def minhashSig(shingles: Column, k: Int): Column =
-    call_function("minhash_sig", shingles, lit(k))
 
   /** 64-bit SimHash of an array<string> token column. */
   def simhash64(tokens: Column): Column = call_function("simhash64", tokens)

@@ -2,45 +2,6 @@ package graft
 
 import org.apache.spark.sql.types._
 
-/** Raw ticker as served by the exchange REST endpoint, restricted to the
-  * fields the reference consumes (reference main.py:159-162,196-198; FIXTURES.md §1).
-  * All numerics are strings on the wire — the reference coerces with
-  * `float()`/`int()` and drops rows that fail (main.py:164-169,220-223).
-  *
-  * `src_seq` is the explicit arrival-order stamp. pandas preserves input
-  * order implicitly; Spark does not survive a shuffle with it, so keep-last
-  * dedup (main.py:233) and first-non-null spot detection (main.py:112-116)
-  * are made deterministic by ordering on this column (SURVEY.md §7.4).
-  */
-case class TickerRaw(
-    symbol: String,
-    contract_type: String,
-    strike_price: String,
-    spot_price: String,
-    mark_price: String,
-    oi_contracts: String,
-    src_seq: Long
-)
-
-/** One sink row — the reference's canonical 11-column schema in canonical
-  * order (reference main.py:200-212,315-316; SURVEY.md §1.2). Dates/times are
-  * kept typed internally and formatted at the sink boundary only
-  * (SURVEY.md §7.4 "stringly sorting").
-  */
-case class OptionRow(
-    SYMBOL: String,
-    Date: String,
-    Time: String,
-    Future_Price: Double,
-    Expiry_Date: String,
-    Strike: Double,
-    Option_Type: String,
-    Close: Double,
-    OI: Long,
-    Open: Double,
-    OI_Change: Long
-)
-
 object Schemas {
   /** Explicit source schema — never infer in production paths (SURVEY §1.4). */
   val ticker: StructType = StructType(

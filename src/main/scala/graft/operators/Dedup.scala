@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
 import org.apache.spark.storage.StorageLevel
@@ -24,12 +25,16 @@ import graft.functions.GraftFunctions
   *     subtree (shingling / MinHash / SimHash) feeds BOTH sides of the
   *     candidate join plus the verification join, and without that Spark
   *     recomputes it per reference (observed 2-4× sketch cost at sf0.1).
-  *     [[minhashLshPairs]] uses an eager `localCheckpoint`, whose blocks
-  *     the ContextCleaner frees once the returned frame is unreachable.
-  *     The other miners still `persist` (MEMORY_AND_DISK, spills instead
-  *     of OOMing at scale): the CacheManager keeps such an entry, and its
-  *     blocks, until `unpersist` — a frame persisted inside an operator
-  *     that returns a lazy result stays cached for the session.
+  *     One rule: a miner materializes with a `localCheckpoint` it owns,
+  *     never a `persist`. The CacheManager keeps a persisted frame until
+  *     `unpersist`, so a persist inside an operator that returns a lazy
+  *     result stays cached for the session; a checkpoint's blocks are
+  *     freed by the ContextCleaner once the returned frame is unreachable.
+  *     The one exception is [[NearDupIndex]], a memoized artifact whose
+  *     owner releases its four persisted frames with `unpersistAll`
+  *     (and [[incrementalClassifyIndexed]], whose two delivery persists
+  *     are still open: NearDupBucketedSpec reads the index joins through
+  *     their cached plans).
   */
 object Dedup {
 
@@ -166,169 +171,180 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): DataFrame = {
-    // One shuffle carries each text ONCE: the class groupBy keeps the
-    // min-id representative, the copy count, AND the text itself
-    // (any_value is exact here — every text in an md5 class is identical
-    // by construction, the same collision tolerance the digest already
-    // accepts). The earlier shape (group ids only, then join the texts
-    // back to find each class's representative row) shuffled the full
-    // text column twice and persisted it once more — measured 3.8× on
-    // the sf0.1 bench for x06, 2.9× for x14, with zero semantic change.
-    // No spread() here: the class groupBy's own exchange redistributes to
-    // full parallelism, and repDocs (the shingle-compute input) sits on
-    // the post-shuffle side of it.
-    val base = docs.select(col(idCol), col(textCol))
-    val reps = base
-      .groupBy(md5(col(textCol)).as("text_md5"))
-      .agg(
-        min(col(idCol)).as("rep_id"),
-        count(lit(1)).as("n_copies"),
-        any_value(col(textCol)).as(textCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val repDocs = reps.select(col("rep_id").as(idCol), col(textCol))
-    // the md5→rep mapping for fan-out re-derives the digest map-side from
-    // the scan — ids and 32-char hashes shuffle, texts never do
-    val members = base
-      .select(md5(col(textCol)).as("text_md5"), col(idCol).as("member_id"))
-      .join(reps.select(col("text_md5"), col("rep_id")), "text_md5")
-      .select(col("rep_id"), col("member_id"))
-
-    val (repPairs, keptReps) = ngramJaccardCore(repDocs, n, threshold, maxDf, idCol, textCol)
-
-    val mA = members.select(col("rep_id").as("a_id"), col("member_id").as("a_m"))
-    val mB = members.select(col("rep_id").as("b_id"), col("member_id").as("b_m"))
-    val cross = repPairs
-      .join(mA, "a_id")
-      .join(mB, "b_id")
-      .select(
-        least(col("a_m"), col("b_m")).as("a_id"),
-        greatest(col("a_m"), col("b_m")).as("b_id"),
-        col("jac")
-      )
-    val dupMembers = members
-      .join(reps.where(col("n_copies") > 1).select(col("rep_id")), "rep_id")
-      .join(keptReps.select(col(idCol).as("rep_id")), "rep_id")
-    val within = dupMembers
-      .select(col("rep_id"), col("member_id").as("a_id"))
-      .join(dupMembers.select(col("rep_id"), col("member_id").as("b_id")), "rep_id")
-      .where(col("a_id") < col("b_id") && lit(threshold) <= 1.0)
-      .select(col("a_id"), col("b_id"), lit(1.0).as("jac"))
-    cross.unionByName(within)
+    val classes = sidClasses(docs, n, maxDf, idCol, textCol)
+    // both sides of the candidate join probe with their prefixes
+    val prefix = classes.select(col("rep_id"), explode(prefixSids(threshold)).as("sid"))
+    val candidates = prefix
+      .select(col("rep_id").as("a_id"), col("sid"))
+      .join(prefix.select(col("rep_id").as("b_id"), col("sid")), Seq("sid"))
+      .where(col("a_id") < col("b_id"))
+      .select("a_id", "b_id")
+      .distinct()
+    val repPairs = candidates
+      .join(classSide(classes, "a"), "a_id")
+      .join(classSide(classes, "b"), "b_id")
+      .withColumn(
+        "jac",
+        round(jaccard(col("a_size"), col("b_size"), size(array_intersect(col("a_sh"), col("b_sh")))), 6))
+      .where(col("jac") >= threshold)
+    val dupClasses = classes.where(size(col("members")) > 1 && lit(threshold) <= 1.0)
+    asInputIds(fanOut(repPairs, dupClasses, "jac", symmetric = true), docs, idCol)
   }
 
-  /** The distinct-text mining core of [[ngramJaccardPairs]]: inverted
-    * index, df prune, recount, self-join, threshold. Returns the pairs
-    * and the docs whose shingle sets survived the prune non-empty (the
-    * within-class eligibility set for the fan-out).
+  /** The representative-class frame of the shingle miners: one row per
+    * distinct text (md5 class) with its min id `rep_id`, its `members`
+    * ids and its shingle set `sh`. One shuffle carries each text ONCE:
+    * the class groupBy keeps the min id, the member list AND the text
+    * itself (any_value is exact here — every text in an md5 class is
+    * identical by construction, the same collision tolerance the digest
+    * already accepts), and spread() restores parallelism for the shingle
+    * walk. Fan-outs explode the member lists, so no step joins back to
+    * the documents.
     */
-  private def ngramJaccardCore(
-      docs: DataFrame,
-      n: Int,
-      threshold: Double,
-      maxDf: Int,
-      idCol: String,
-      textCol: String
-  ): (DataFrame, DataFrame) = {
-    // persist BEFORE the generator: the exploded postings feed both the df
-    // count and the kept postings, so without it each reference would
-    // repeat the tokenize + shingle walk
-    val postings = withShingles(docs, n, idCol, textCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-      .select(col(idCol), explode(col("sh")).as("shingle"))
-    // df-prune, then recount per-doc set sizes over SURVIVING shingles so
-    // the Jaccard is exact within the pruned shingle space (see scaladoc).
-    // Both counts are groupBy aggregations, NOT count().over(Window): a
-    // window has no map-side partial aggregation, so every posting of a
-    // stop-shingle would land on ONE task before the df<=maxDf prune could
-    // drop it — a single-task OOM at corpus scale. groupBy compresses each
-    // shingle to one (shingle, count) row per mapper; the heavy-hitter set
-    // (df > maxDf) is then at most |postings|/maxDf distinct keys — a
-    // >=maxDf-fold compression of the postings volume — so it broadcasts,
-    // and the anti join drops hot postings map-side with no shuffle of the
-    // postings at all for the prune step.
-    val dfCounts = postings
-      .groupBy("shingle")
-      .agg(count(lit(1)).as("df"))
+  private def representatives(docs: DataFrame, n: Int, idCol: String, textCol: String): DataFrame =
+    spread(
+      docs
+        .groupBy(md5(col(textCol)))
+        .agg(
+          min(col(idCol)).as("rep_id"),
+          collect_list(col(idCol)).as("members"),
+          any_value(col(textCol)).as(textCol)))
+      .select(
+        col("rep_id"),
+        col("members"),
+        TextAnalysis.shingles(TextAnalysis.tokens(col(textCol)), n).as("sh"))
+
+  /** The sid encoder shared by the inverted-index miners and
+    * [[buildNearDupIndex]]. `sets` holds (idCol, sh); returns the
+    * shingle df counts, the sid table (shingle, sid) of the kept space,
+    * and the arrays frame (idCol, osh, sh_size) — each set's kept sids,
+    * sorted — holding only sets with a kept shingle.
+    *
+    * df-prune, then recount per-set sizes over SURVIVING shingles so the
+    * Jaccard is exact within the pruned shingle space (see
+    * [[ngramJaccardPairs]]). The df count is a groupBy aggregation, NOT
+    * count().over(Window): a window has no map-side partial aggregation,
+    * so every posting of a stop-shingle would land on ONE task before the
+    * prune could drop it — a single-task OOM at corpus scale. groupBy
+    * compresses each shingle to one (shingle, count) row per mapper; the
+    * heavy-hitter set (df > maxDf) is then at most |postings|/maxDf
+    * distinct keys, so it broadcasts, and the anti join drops hot
+    * postings map-side before the encode join shuffles them.
+    *
+    * DICTIONARY-ENCODE the kept shingle space as dense INTEGER ids in
+    * (df, shingle) order before building the arrays. The candidate join
+    * hashes each prefix element and the verifier intersects whole arrays
+    * — doing both over ~30-char strings was the suite's dominant CPU
+    * (x06 70 s, x14 83 s at sf0.1). A dense rank is a BIJECTION kept-
+    * shingle → int, so intersection sizes are provably unchanged (no
+    * hash-collision caveat), int arrays are several× smaller through the
+    * verify joins, and ascending-int sort order IS the rarest-first
+    * (df, shingle) order the prefix lemma runs on ([[prefixSids]]). Sids
+    * come from the two-phase [[GlobalRank]], so no single-partition
+    * window.
+    */
+  private def encodeSids(sets: DataFrame, maxDf: Int, idCol: String): (DataFrame, DataFrame, DataFrame) = {
+    val postings = sets.select(col(idCol), explode(col("sh")).as("shingle"))
+    val dfCounts = postings.groupBy("shingle").agg(count(lit(1)).as("df"))
     val hot = dfCounts.where(col("df") > maxDf).select("shingle")
-    val kept = postings.join(broadcast(hot), Seq("shingle"), "left_anti")
-    // PREFIX FILTERING (AllPairs / PPJoin, Bayardo et al. WWW'07 and Xiao
-    // et al. WWW'08): under any global total order on shingles, two sets
-    // with Jaccard ≥ t must share an element within their first
-    // p = |S| − ⌈t·|S|⌉ + 1 shingles — so only the PREFIX needs to enter
-    // the inverted index. Ordering by ascending document frequency puts
-    // the RAREST shingles in the prefix, which is what collapses the
-    // candidate count: a shingle's index bucket mines df²/2 pairs, and the
-    // prefix keeps exactly the shingles with the smallest df. Measured at
-    // sf0.1 (5000 distinct docs, ~52 shingles/doc, t=0.5): 409k candidate
-    // pairs vs 2.79M co-occurrence rows for the count-every-co-occurrence
-    // join this replaces — 6.8× less quadratic output, bit-identical
-    // result. End-to-end wall is a WASH at this SF (verifying a candidate
-    // via array_intersect costs ~100× a narrow co-occurrence row, and this
-    // synthetic corpus's df distribution is flat); the shape is chosen for
-    // the 100× case, where the old join's Σdf² mass concentrates in
-    // near-maxDf shingles — each contributing ~maxDf²/2 pairs just under
-    // the prune — that a rarest-first prefix excludes unless they are
-    // among a doc's (1−t) rarest. Verification cost stays bounded by
-    // candidates × doc size, and both stages keep map-side partial
-    // aggregation. The prefix length
-    // uses t−1e−6 so a pair whose UNROUNDED Jaccard sits a hair below t
-    // but rounds up to it at 6 dp (the registered comparison) still
-    // satisfies the lemma's premise.
-    val tEff = threshold - 1e-6
-    // DICTIONARY-ENCODE the surviving shingle space as dense INTEGER ids in
-    // (df, shingle) order before building per-doc arrays. The candidate
-    // join hashes each prefix element and the verifier intersects whole
-    // arrays — doing both over ~30-char strings was the suite's dominant
-    // CPU (x06 70 s, x14 83 s at sf0.1). A dense rank is a BIJECTION
-    // kept-shingle → int, so intersection sizes are provably unchanged
-    // (no hash-collision caveat), int arrays are several× smaller through
-    // the two verify joins, and ascending-int sort order IS the rarest-
-    // first (df, shingle) order the prefix lemma runs on — sid assignment
-    // reuses the two-phase GlobalRank, so no single-partition window. The
-    // encode join on `shingle` replaces the previous df-annotation join:
-    // same shuffle, narrower payload out.
     val sids = GlobalRank
-      .withGlobalRank(
-        dfCounts.where(col("df") <= maxDf),
-        Seq(col("df"), col("shingle")),
-        "sid")
+      .withGlobalRank(dfCounts.where(col("df") <= maxDf), Seq(col("df"), col("shingle")), "sid")
       .select(col("shingle"), col("sid").cast("int").as("sid"))
-    val ordered = kept
+    val arrays = postings
+      .join(broadcast(hot), Seq("shingle"), "left_anti")
       .join(sids, Seq("shingle"))
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(col("sid"))).as("osh"))
       .select(col(idCol), col("osh"), size(col("osh")).as("sh_size"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val prefix = ordered.select(
-      col(idCol),
-      explode(
-        slice(
-          col("osh"),
-          lit(1),
-          greatest(
-            lit(1),
-            (col("sh_size") - ceil(col("sh_size") * lit(tEff) - lit(1e-9)) + 1).cast("int")
-          )
-        )
-      ).as("shingle")
-    )
-    val candidates = prefix
-      .select(col(idCol).as("a_id"), col("shingle"))
-      .join(prefix.select(col(idCol).as("b_id"), col("shingle")), Seq("shingle"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id")
-      .distinct()
-    val oA = ordered.select(col(idCol).as("a_id"), col("osh").as("a_sh"), col("sh_size").as("a_size"))
-    val oB = ordered.select(col(idCol).as("b_id"), col("osh").as("b_sh"), col("sh_size").as("b_size"))
-    val pairs = candidates
-      .join(oA, "a_id")
-      .join(oB, "b_id")
-      .withColumn("common", size(array_intersect(col("a_sh"), col("b_sh"))))
-      .withColumn("jac", round(jaccard(col("a_size"), col("b_size"), col("common")), 6))
-      .where(col("jac") >= threshold)
-      .select(col("a_id"), col("b_id"), col("jac"))
-    (pairs, ordered.select(col(idCol)))
+    (dfCounts, sids, arrays)
   }
+
+  /** The pair miners' index: [[representatives]] with their sid arrays,
+    * (rep_id, members, osh, sh_size), one row per class whose shingle
+    * set survived the df prune non-empty. Two owned checkpoints: the
+    * representatives feed the df count, the sid table and the encode
+    * join, and the index feeds both candidate sides, both verification
+    * sides and the within-class fan-out.
+    */
+  private def sidClasses(docs: DataFrame, n: Int, maxDf: Int, idCol: String, textCol: String): DataFrame = {
+    val reps = representatives(docs, n, idCol, textCol).localCheckpoint()
+    val (_, _, arrays) = encodeSids(reps, maxDf, "rep_id")
+    arrays.join(reps.select(col("rep_id"), col("members")), "rep_id").localCheckpoint()
+  }
+
+  /** One verification side of the [[sidClasses]] index, prefixed `p`. */
+  private def classSide(classes: DataFrame, p: String): DataFrame =
+    classes.select(
+      col("rep_id").as(s"${p}_id"),
+      col("osh").as(s"${p}_sh"),
+      col("sh_size").as(s"${p}_size"),
+      col("members").as(s"${p}_members"))
+
+  /** PREFIX FILTERING (AllPairs / PPJoin, Bayardo et al. WWW'07 and Xiao
+    * et al. WWW'08), the prefix of the sorted sid array `osh` of size
+    * `sh_size`: under any global total order on shingles, two sets with
+    * Jaccard ≥ t must share an element within their first
+    * p = |S| − ⌈t·|S|⌉ + 1 shingles (and C(A,B) ≥ t forces an element of
+    * B within A's first p) — so only the PREFIX needs to enter the
+    * inverted index. Ordering by ascending document frequency puts the
+    * RAREST shingles in the prefix, which is what collapses the candidate
+    * count: a shingle's index bucket mines df²/2 pairs, and the prefix
+    * keeps exactly the shingles with the smallest df. Measured at sf0.1
+    * (5000 distinct docs, ~52 shingles/doc, t=0.5): 409k candidate pairs
+    * vs 2.79M co-occurrence rows for the count-every-co-occurrence join
+    * this replaced — 6.8× less quadratic output, bit-identical result.
+    * The shape is chosen for the 100× case, where the old join's Σdf²
+    * mass concentrates in near-maxDf shingles that a rarest-first prefix
+    * excludes unless they are among a doc's (1−t) rarest.
+    *
+    * The length uses t−1e−6 so a pair whose UNROUNDED score sits a hair
+    * below t but rounds up to it at 6 dp (the registered comparison)
+    * still satisfies the lemma's premise.
+    */
+  private def prefixSids(threshold: Double): Column = {
+    val length = col("sh_size") - ceil(col("sh_size") * lit(threshold - 1e-6) - lit(1e-9)) + 1
+    slice(col("osh"), lit(1), greatest(lit(1), length.cast("int")))
+  }
+
+  /** Member-level pairs from verified representative pairs (a_id, b_id,
+    * `score`, a_members, b_members): every member pair across two
+    * classes inherits its representatives' score, a function of the texts
+    * alone, and each class of `dupClasses` (rep_id, members) adds its
+    * within-class pairs at 1.0 (exact duplicates). `symmetric` emits
+    * a_id < b_id; otherwise the pair keeps its orientation and a ≠ b.
+    */
+  private def fanOut(
+      repPairs: DataFrame,
+      dupClasses: DataFrame,
+      score: String,
+      symmetric: Boolean
+  ): DataFrame = {
+    val ends =
+      if (symmetric) Seq(least(col("a_m"), col("b_m")), greatest(col("a_m"), col("b_m")))
+      else Seq(col("a_m"), col("b_m"))
+    val cross = repPairs
+      .select(explode(col("a_members")).as("a_m"), col("b_members"), col(score))
+      .select(col("a_m"), explode(col("b_members")).as("b_m"), col(score))
+      .select(ends(0).as("a_id"), ends(1).as("b_id"), col(score))
+    val within = dupClasses
+      .select(explode(col("members")).as("a_id"), col("members"))
+      .select(col("a_id"), explode(col("members")).as("b_id"))
+      .where(if (symmetric) col("a_id") < col("b_id") else col("a_id") =!= col("b_id"))
+      .select(col("a_id"), col("b_id"), lit(1.0).as(score))
+    cross.unionByName(within)
+  }
+
+  /** `pairs` with a_id and b_id as nullable as the input's id column:
+    * ids exploded from a collected member list are typed non-null, and
+    * the inverted-index miners' output schema follows their input's.
+    */
+  private def asInputIds(pairs: DataFrame, docs: DataFrame, idCol: String): DataFrame =
+    if (!docs.schema(idCol).nullable) pairs
+    else {
+      def nullable(c: String) =
+        GraftSqlBridge.column(KnownNullable(GraftSqlBridge.expression(col(c)))).as(c)
+      pairs.select(nullable("a_id"), nullable("b_id"), col(pairs.columns(2)))
+    }
 
   /** MinHash-LSH near-dup candidate pairs, verified with exact Jaccard.
     *
@@ -363,26 +379,11 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): DataFrame = {
-    // ONE representative frame feeds every later step: the class groupBy
-    // carries each text once (see ngramJaccardPairs — same any_value-is-
-    // exact-within-an-md5-class argument) with its member ids, spread()
-    // restores parallelism for the shingle walk, and the eager
+    // ONE representative frame feeds every later step: the eager
     // localCheckpoint evaluates the shingles and the band signature once.
     // Both sides of the band join, the two verification joins and both
-    // fan-outs read it, so no step goes back to the documents; nothing is
-    // registered with the CacheManager, so the ContextCleaner frees the
-    // checkpoint's blocks once the returned frame is unreachable.
-    val reps = spread(
-      docs
-        .groupBy(md5(col(textCol)))
-        .agg(
-          min(col(idCol)).as("rep_id"),
-          collect_list(col(idCol)).as("members"),
-          any_value(col(textCol)).as(textCol)))
-      .select(
-        col("rep_id"),
-        col("members"),
-        TextAnalysis.shingles(TextAnalysis.tokens(col(textCol)), n).as("sh"))
+    // fan-outs read it, so no step goes back to the documents.
+    val reps = representatives(docs, n, idCol, textCol)
       // (band_id, band_hash) source in ONE expression evaluation per doc:
       // MinHashBands computes the k-hash signature internally and emits the
       // per-band fold, so no projection rewrite can duplicate the signature
@@ -416,25 +417,10 @@ object Dedup {
             size(array_intersect(col("a_sh"), col("b_sh")))),
           6))
       .where(col("jac") >= threshold)
-
-    // cross-class fan-out: every member pair across two verified classes
-    val cross = repPairs
-      .select(explode(col("a_members")).as("a_m"), col("b_members"), col("jac"))
-      .select(col("a_m"), explode(col("b_members")).as("b_m"), col("jac"))
-      .select(
-        least(col("a_m"), col("b_m")).as("a_id"),
-        greatest(col("a_m"), col("b_m")).as("b_id"),
-        col("jac"))
-    // within-class pairs: exact duplicates, Jaccard 1, from a class with
-    // copies whose shingle set is non-empty — the banding path's guard (a
-    // doc too short to shingle never pairs)
-    val within = reps
-      .where(size(col("members")) > 1 && size(col("sh")) > 0)
-      .select(explode(col("members")).as("a_id"), col("members"))
-      .select(col("a_id"), explode(col("members")).as("b_id"))
-      .where(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), lit(1.0).as("jac"))
-    cross.unionByName(within)
+    // within-class pairs come from classes with copies whose shingle set
+    // is non-empty — the banding path's guard (a doc too short to shingle
+    // never pairs)
+    fanOut(repPairs, reps.where(size(col("members")) > 1 && size(col("sh")) > 0), "jac", symmetric = true)
   }
 
   /** SimHash near-dup pairs: 64-bit signature per doc (map-side expression),
@@ -502,7 +488,7 @@ object Dedup {
         col("sim"),
         posexplode(array(bandVals: _*)).as(Seq("band_id", "band_val"))
       )
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val l = banded.select(col(idCol).as("a_id"), col("sim").as("a_sim"), col("band_id"), col("band_val"))
     val r = banded.select(col(idCol).as("b_id"), col("sim").as("b_sim"), col("band_id"), col("band_val"))
     l.join(r, Seq("band_id", "band_val"))
@@ -689,14 +675,14 @@ object Dedup {
       bucketsOf: Column => Column
   ): DataFrame = {
     val base = spread(emb.select(col(idCol).as("id"), col(vecCol).as("vec")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     // all tables' buckets from ONE codegen'd expression evaluation
     val bucketed = base
       .select(
         col("id"),
         posexplode(bucketsOf(col("vec"))).as(Seq("table_id", "bucket"))
       )
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val l = bucketed.select(col("id").as("a_id"), col("table_id"), col("bucket"))
     val r = bucketed.select(col("id").as("b_id"), col("table_id"), col("bucket"))
     val candidates = l
@@ -751,8 +737,9 @@ object Dedup {
     // materialize the gram arrays BEFORE the generator (the §8.4 trap
     // ngramNovelty documents: a live gram expression under posexplode
     // re-runs the tokenize/slice/concat pipeline interpreted per exploded
-    // row — measured 10.8 s → ~3 s at sf0.1 here); cached blocks are
-    // dropped by the ContextCleaner when the plan is unreferenced.
+    // row — measured 10.8 s → ~3 s at sf0.1 here); the checkpoint's
+    // blocks are dropped by the ContextCleaner once the plan is
+    // unreferenced.
     // spread() first — the x34 rule: the tokenize→gram stage is the CPU
     // cost and must not inherit the scan's file-count parallelism (one
     // parquet file = one task = wall ≈ cpu on a 32-core host, measured
@@ -761,7 +748,7 @@ object Dedup {
       .select(
         col(idCol),
         TextAnalysis.rawNgrams(TextAnalysis.tokens(col(textCol)), k).as("grams"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val grams = sized
       // n_grams rides along from the array size — not a second
       // full-partition count window over the exploded rows
@@ -898,84 +885,27 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): DataFrame = {
-    val tEff = threshold - 1e-6
-    val base = docs.select(col(idCol), col(textCol))
-    val reps = base
-      .groupBy(md5(col(textCol)).as("text_md5"))
-      .agg(
-        min(col(idCol)).as("rep_id"),
-        count(lit(1)).as("n_copies"),
-        any_value(col(textCol)).as(textCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val repDocs = reps.select(col("rep_id").as(idCol), col(textCol))
-    val members = base
-      .select(md5(col(textCol)).as("text_md5"), col(idCol).as("member_id"))
-      .join(reps.select(col("text_md5"), col("rep_id")), "text_md5")
-      .select(col("rep_id"), col("member_id"))
-
-    // distinct-text mining: postings → df prune → sid encode (rarest
-    // first) → sorted int arrays, the x06 core's shape with a one-sided
-    // prefix
-    val postings = withShingles(repDocs, n, idCol, textCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-      .select(col(idCol), explode(col("sh")).as("shingle"))
-    val dfCounts = postings.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val hot = dfCounts.where(col("df") > maxDf).select("shingle")
-    val kept = postings.join(broadcast(hot), Seq("shingle"), "left_anti")
-    val sids = GlobalRank
-      .withGlobalRank(dfCounts.where(col("df") <= maxDf), Seq(col("df"), col("shingle")), "sid")
-      .select(col("shingle"), col("sid").cast("int").as("sid"))
-    val ordered = kept
-      .join(sids, Seq("shingle"))
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(col("sid"))).as("osh"))
-      .select(col(idCol), col("osh"), size(col("osh")).as("sh_size"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val prefixA = ordered.select(
-      col(idCol).as("a_id"),
-      explode(
-        slice(
-          col("osh"),
-          lit(1),
-          greatest(
-            lit(1),
-            (col("sh_size") - ceil(col("sh_size") * lit(tEff) - lit(1e-9)) + 1).cast("int"))))
-        .as("sid"))
-    val fullB = ordered.select(col(idCol).as("b_id"), explode(col("osh")).as("sid"))
+    val classes = sidClasses(docs, n, maxDf, idCol, textCol)
+    // only the contained side explodes a prefix; the containing side is
+    // probed through its full kept postings
+    val prefixA = classes.select(col("rep_id").as("a_id"), explode(prefixSids(threshold)).as("sid"))
+    val fullB = classes.select(col("rep_id").as("b_id"), explode(col("osh")).as("sid"))
     val candidates = prefixA
       .join(fullB, Seq("sid"))
       .where(col("a_id") =!= col("b_id"))
       .select("a_id", "b_id")
       .distinct()
-    val oA = ordered.select(col(idCol).as("a_id"), col("osh").as("a_sh"), col("sh_size").as("a_size"))
-    val oB = ordered.select(col(idCol).as("b_id"), col("osh").as("b_sh"))
     val repPairs = candidates
-      .join(oA, "a_id")
-      .join(oB, "b_id")
-      .withColumn("common", size(array_intersect(col("a_sh"), col("b_sh"))))
-      .withColumn("cont", round(col("common").cast("double") / col("a_size").cast("double"), 6))
+      .join(classSide(classes, "a"), "a_id")
+      .join(classSide(classes, "b"), "b_id")
+      .withColumn(
+        "cont",
+        round(
+          size(array_intersect(col("a_sh"), col("b_sh"))).cast("double") / col("a_size").cast("double"),
+          6))
       .where(col("cont") >= threshold)
-      .select(col("a_id"), col("b_id"), col("cont"))
-
-    // fan-out preserving ORIENTATION: a-side members contained in b-side
-    // members
-    val mA = members.select(col("rep_id").as("a_id"), col("member_id").as("a_m"))
-    val mB = members.select(col("rep_id").as("b_id"), col("member_id").as("b_m"))
-    val cross = repPairs
-      .join(mA, "a_id")
-      .join(mB, "b_id")
-      .select(col("a_m").as("a_id"), col("b_m").as("b_id"), col("cont"))
-    // within-class ordered pairs: identical texts contain each other at
-    // 1.0, both directions, iff the class survived the prune non-empty
-    val dupMembers = members
-      .join(reps.where(col("n_copies") > 1).select(col("rep_id")), "rep_id")
-      .join(ordered.select(col(idCol).as("rep_id")), "rep_id")
-    val within = dupMembers
-      .select(col("rep_id"), col("member_id").as("a_id"))
-      .join(dupMembers.select(col("rep_id"), col("member_id").as("b_id")), "rep_id")
-      .where(col("a_id") =!= col("b_id") && lit(threshold) <= 1.0)
-      .select(col("a_id"), col("b_id"), lit(1.0).as("cont"))
-    cross.unionByName(within)
+    val dupClasses = classes.where(size(col("members")) > 1 && lit(threshold) <= 1.0)
+    asInputIds(fanOut(repPairs, dupClasses, "cont", symmetric = false), docs, idCol)
   }
 
   /** Semantic dedup (SemDeDup, Abbas et al. 2023 — "SemDeDup: Data-
@@ -1105,9 +1035,8 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): NearDupIndex = {
-    val tEff = threshold - 1e-6
-    // one shuffle carries each text once (the x06 reshape): distinct-text
-    // classes keep min id + the text itself
+    // one shuffle carries each text once: distinct-text classes keep
+    // min id + the text itself
     val reps = index
       .select(col(idCol), col(textCol))
       .groupBy(md5(col(textCol)).as("text_md5"))
@@ -1120,41 +1049,17 @@ object Dedup {
       reps.select(col("old_id").as(idCol), col("__text").as(textCol)),
       n, idCol, textCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val postings = shingled
-      .select(col(idCol).as("old_id"), explode(col("sh")).as("shingle"))
-    // frozen df over distinct index texts; kept shingles get dense integer
-    // sids in (df, shingle) order — the same rarest-first total order the
-    // x06 core mines under, assigned with the two-phase GlobalRank (no
-    // single-partition window)
-    val dfCounts = postings.groupBy("shingle").agg(count(lit(1)).as("df"))
-    val sids = GlobalRank
-      .withGlobalRank(dfCounts.where(col("df") <= maxDf), Seq(col("df"), col("shingle")), "sid")
-      .select(col("shingle"), col("sid").cast("int").as("sid"))
+    // frozen df over distinct index texts, encoded in the same rarest-
+    // first sid order the pair miners mine under
+    val (dfCounts, sids, sidArrays) =
+      encodeSids(shingled.select(col(idCol).as("old_id"), col("sh")), maxDf, "old_id")
     val lookup = dfCounts
       .join(sids, Seq("shingle"), "left")
       .select(col("shingle"), col("sid"), (col("df") > maxDf).as("in_stop"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val arrays = postings
-      .join(sids, Seq("shingle"))
-      .groupBy(col("old_id"))
-      .agg(sort_array(collect_list(col("sid"))).as("osh"))
-      .select(col("old_id"), col("osh"), size(col("osh")).as("sh_size"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // AllPairs prefix postings (Bayardo WWW'07): under the shared sid
-    // order, a pair at Jaccard ≥ t must collide within each side's first
-    // size − ceil(t·size) + 1 elements — identical prefix arithmetic to
-    // the x06 core, including the t−1e−6 rounding slack
+    val arrays = sidArrays.persist(StorageLevel.MEMORY_AND_DISK)
     val prefixes = arrays
-      .select(
-        col("old_id"),
-        explode(
-          slice(
-            col("osh"),
-            lit(1),
-            greatest(
-              lit(1),
-              (col("sh_size") - ceil(col("sh_size") * lit(tEff) - lit(1e-9)) + 1).cast("int"))))
-          .as("sid"))
+      .select(col("old_id"), explode(prefixSids(threshold)).as("sid"))
       .select(col("sid"), col("old_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // MATERIALIZE the artifact before releasing reps: persist/unpersist is
@@ -1202,7 +1107,6 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): DataFrame = {
-    val tEff = idx.threshold - 1e-6
     val newD = newDocs.select(col(idCol).as("new_id"), col(textCol).as("new_text"))
     val classes = newD
       .groupBy(md5(col("new_text")).as("text_md5"))
@@ -1231,17 +1135,7 @@ object Dedup {
     // prefix under the shared frozen order, unseen-last: slice clamps at
     // the array end, so a prefix reaching into unseen territory simply
     // contributes fewer probe sids (unseen shingles can't collide anyway)
-    val dPrefix = sized
-      .select(
-        col("new_rep"),
-        explode(
-          slice(
-            col("osh"),
-            lit(1),
-            greatest(
-              lit(1),
-              (col("sh_size") - ceil(col("sh_size") * lit(tEff) - lit(1e-9)) + 1).cast("int"))))
-          .as("sid"))
+    val dPrefix = sized.select(col("new_rep"), explode(prefixSids(idx.threshold)).as("sid"))
     // The posture's precondition is delivery ≪ index, so the probe MUST
     // be a map-side broadcast of the delivery prefix against the index
     // postings — pinned with an explicit hint rather than left to AQE,

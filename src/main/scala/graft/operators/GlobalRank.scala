@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.storage.StorageLevel
 
 /** Exact global ranking without a single-partition window.
   *
@@ -35,9 +34,11 @@ import org.apache.spark.storage.StorageLevel
 object GlobalRank {
 
   /** `df` plus an `outCol` LONG column holding the 1-based global
-    * `row_number` over `sort`. The returned frame is persisted
-    * (MEMORY_AND_DISK) because the range shuffle feeds both the offset
-    * count job and the caller's downstream plan.
+    * `row_number` over `sort`. The range-partitioned frame feeds both the
+    * offset count and the caller's downstream plan, so it is a lazy
+    * `localCheckpoint` that the offset count materializes: no extra job,
+    * and the ContextCleaner frees its blocks once the returned frame is
+    * unreachable.
     */
   def withGlobalRank(
       df: DataFrame,
@@ -50,7 +51,7 @@ object GlobalRank {
     val ranged = df
       .repartitionByRange(p, sort: _*)
       .withColumn("__part", spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val counts = ranged
       .groupBy(col("__part"))
       .count()

@@ -17,18 +17,6 @@ object Parse {
     */
   def tryDouble(c: Column): Column = c.try_cast(DoubleType)
 
-  /** STATE-side coercion (reference `pd.to_numeric(errors='coerce')` on the
-    * sheet read-back, main.py:276-277, then NULL→0 at lookup build,
-    * main.py:284-285): any unparseable value becomes 0 and the row is KEPT.
-    * Snapshot-side parsing is stricter — see [[markPriceOrDrop]] /
-    * [[oiContractsOrDrop]].
-    */
-  def tryLongOrZero(c: Column): Column =
-    coalesce(c.try_cast(DoubleType).try_cast(LongType), lit(0L))
-
-  def tryDoubleOrZero(c: Column): Column =
-    coalesce(c.try_cast(DoubleType), lit(0.0))
-
   /** SNAPSHOT-side mark_price semantics (reference main.py:197:
     * `float(ticker.get('mark_price', 0))`): an ABSENT value defaults to 0,
     * but a present-yet-unparseable value throws and the whole row is dropped

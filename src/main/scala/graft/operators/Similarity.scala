@@ -575,19 +575,6 @@ object Similarity {
     rankTopK(negs, k)
   }
 
-  /** Sign-random-projection bucket id: `numPlanes` deterministic
-    * pseudo-random hyperplanes; bit p of the bucket = sign of dot(v, h_p).
-    * Plane components are XXH64-derived and mapped to [-1, 1] — seed-stable
-    * across runs and executors, no RNG state to ship.
-    *
-    * Single-table convenience over [[graft.functions.RpBuckets]], the
-    * codegen'd expression that computes the dim × planes loop inside
-    * whole-stage-generated Java (the earlier higher-order-builtin
-    * formulation allocated 2 arrays per plane per row and cost ~10× more).
-    */
-  def rpBucket(vec: Column, numPlanes: Int, seed: Int = 42): Column =
-    element_at(GraftFunctions.rpBuckets(vec, 1, numPlanes, seed), 1)
-
   /** Approximate top-k via multi-table sign-RP LSH (OR-amplification, the
     * standard E2LSH scheme): `tables` independent hash tables of
     * `bitsPerTable` hyperplanes each; a corpus vector is a candidate for a

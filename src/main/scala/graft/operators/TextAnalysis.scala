@@ -74,9 +74,6 @@ object TextAnalysis {
       split(foldConfusables(text), "\\s+"),
       t => t.isin(words.map(w => w: Any): _*))
 
-  /** 64-bit fingerprint (cheaper to store/join than the md5 hex at scale). */
-  def fingerprint64(text: Column): Column = xxhash64(normalize(text))
-
   /** Per-document stats: char count, token count, distinct-token count,
     * avg token length, type-token ratio.
     */

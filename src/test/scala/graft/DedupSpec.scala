@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 import graft.operators.{Dedup, TextAnalysis}
@@ -119,17 +120,33 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
   }
 
-  test("minhashLshPairs leaves no persistent RDD or cache entry behind") {
-    val entries = () => org.apache.spark.sql.GraftTestCacheBridge.cachedEntries(spark)
-    val entries0 = entries()
-    val mark = SparkSpec.rddMark()
-    // three calls on distinct input, each result consumed and then dropped
-    (0 until 3).foreach { i =>
-      assert(Dedup.minhashLshPairs(lshCorpus(i), 3, 0.5, bands = 32, rowsPerBand = 4).count() > 0L)
+  // (miner, first corpus seed, call): no two miners share an input, so
+  // none can read blocks another left
+  for ((miner, seed0, pairs) <- Seq[(String, Int, DataFrame => DataFrame)](
+      ("minhashLshPairs", 0, Dedup.minhashLshPairs(_, 3, 0.5, bands = 32, rowsPerBand = 4)),
+      ("ngramJaccardPairs", 10, Dedup.ngramJaccardPairs(_, 3, 0.5)),
+      ("containmentPairs", 20, Dedup.containmentPairs(_, 3, 0.6)),
+      ("simhashPairs", 30, Dedup.simhashPairs(_))))
+    test(s"$miner leaves no persistent RDD or cache entry behind") {
+      val entries = () => org.apache.spark.sql.GraftTestCacheBridge.cachedEntries(spark)
+      val entries0 = entries()
+      val mark = SparkSpec.rddMark()
+      // three calls on distinct input, each result consumed and then dropped
+      (0 until 3).foreach { i =>
+        assert(pairs(lshCorpus(seed0 + i)).count() > 0L)
+      }
+      assert(entries() === entries0, s"$miner registered a Dataset cache")
+      val left = SparkSpec.persistentSince(mark)
+      assert(left.isEmpty, s"RDDs made by $miner still persistent after GC: $left")
     }
-    assert(entries() === entries0, "minhashLshPairs registered a Dataset cache")
-    val left = SparkSpec.persistentSince(mark)
-    assert(left.isEmpty, s"RDDs made by minhashLshPairs still persistent after GC: $left")
+
+  test("job budget: ngramJaccardPairs mines and writes a 360-doc corpus in 22 Spark jobs") {
+    // two owned checkpoints (representatives, sid index), the GlobalRank
+    // offsets and the pair query; the count repeats exactly from call to
+    // call because no join's strategy waits on a racing stage
+    val jobs = SparkSpec.jobsOf(
+      Dedup.ngramJaccardPairs(lshCorpus(7), 3, 0.5).write.format("noop").mode("overwrite").save())
+    assert(jobs === 22, s"ngramJaccardPairs ran $jobs Spark jobs")
   }
 
   test("job budget: minhashLshPairs mines and writes a 360-doc corpus in ≤ 13 Spark jobs") {

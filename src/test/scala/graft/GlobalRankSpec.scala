@@ -46,4 +46,24 @@ class GlobalRankSpec extends SparkSpec {
     }
     assert(single.isEmpty, s"single-partition shuffle in plan:\n$plan")
   }
+
+  test("owns its range-partitioned frame: no cache entry, no persistent RDD, 7 Spark jobs a call") {
+    val entries = () => org.apache.spark.sql.GraftTestCacheBridge.cachedEntries(spark)
+    val entries0 = entries()
+    val mark = SparkSpec.rddMark()
+    // distinct input per call, so no call can read an earlier one's blocks;
+    // the offsets collect materializes the lazy checkpoint, so a call runs
+    // the sampling and range-shuffle jobs, the offsets count and the write
+    for (seed <- 1 to 3) {
+      val r = new scala.util.Random(seed)
+      val df = (1L to 2000L).map(i => (i, r.nextInt(100).toDouble)).toDF("id", "v")
+      val jobs = SparkSpec.jobsOf(
+        GlobalRank.withGlobalRank(df, Seq(col("v"), col("id")), "rank")
+          .write.format("noop").mode("overwrite").save())
+      assert(jobs === 7, s"withGlobalRank and its write ran $jobs Spark jobs")
+    }
+    assert(entries() === entries0, "withGlobalRank registered a Dataset cache")
+    val left = SparkSpec.persistentSince(mark)
+    assert(left.isEmpty, s"RDDs made by withGlobalRank still persistent after GC: $left")
+  }
 }
